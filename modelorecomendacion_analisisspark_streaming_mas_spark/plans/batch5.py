@@ -22,14 +22,11 @@ would hit operationally:
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from . import memo
 from .catalog import grid_mean_spark, grid_mean_sql, register
 
 # --------------------------------------------------------------------------
@@ -77,24 +74,9 @@ def q53_sql_engine_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # staging itself is proven lossless.
 # --------------------------------------------------------------------------
 
-_STAGED: dict[tuple, str] = {}
-
-
-@atexit.register
-def _cleanup_staged() -> None:
-    for d in _STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED.clear()
-
 
 def _evolved_part_dir(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.readers import table_fingerprint
-
-    # fingerprinted key: in-place regeneration of part re-stages (r10 ADVICE)
-    key = (sf_dir, table_fingerprint(sf_dir, ("part",)))
-    if key not in _STAGED:
-        d = tempfile.mkdtemp(prefix="mras_evolve_")
-        _STAGED[key] = d
+    def write(d: str) -> str:
         part = load_table(spark, sf_dir, "part")
         old_gen = part.filter(F.col("p_partkey") % 2 == 0).select(
             "p_partkey", "p_name", "p_brand", "p_type", "p_size"
@@ -102,7 +84,9 @@ def _evolved_part_dir(spark: SparkSession, sf_dir: str) -> str:
         new_gen = part.filter(F.col("p_partkey") % 2 == 1)
         old_gen.write.mode("overwrite").parquet(f"{d}/gen=1")
         new_gen.write.mode("overwrite").parquet(f"{d}/gen=2")
-    return _STAGED[key]
+        return d
+
+    return memo.staged("evolved_part", sf_dir, ("part",), write)
 
 
 @register(

@@ -17,35 +17,23 @@ from ..graph.algorithms import (
     in_degrees,
     pagerank,
 )
+from . import memo
 from .catalog import register
+
 
 # The encoded graph is loop-invariant ACROSS the five graph queries that
 # share it (g02/g03/g05/g07 iterate on it; g01's degree pass reads it):
-# build + localCheckpoint ONCE per (process, sf_dir) and reuse -- the
+# build + localCheckpoint ONCE per (session, sf_dir) and reuse -- the
 # fact join + distinct + materialization is ~5s of pure duplication per
-# query otherwise. Checkpointed blocks live in the session block manager
-# for the process lifetime, exactly like the streaming replay staging.
-_GRAPH_CACHE: dict[str, tuple[SparkSession, tuple, tuple[DataFrame, DataFrame]]] = {}
-
-
+# query otherwise.
 def _shared_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    from ..sources.readers import table_fingerprint
-
-    # The cached frames reference localCheckpoint blocks in a SPECIFIC
-    # session's block manager, so the cache records which session built
-    # them and rebuilds on mismatch -- a path-only key would hand a frame
-    # bound to a dead session to callers that recreated their SparkSession
-    # (harness restart, fresh test session on the same sf_dir).  Holding
-    # the session object in the value also pins its identity (no id() reuse).
-    # The value also records a content fingerprint of the source tables:
-    # in-place regeneration of the parquet within one process must rebuild,
-    # not serve the stale graph (r10 ADVICE); replacing the entry drops the
-    # only reference to the old checkpointed frames, so no block leak.
-    fp = table_fingerprint(sf_dir, ("lineitem", "orders"))
-    hit = _GRAPH_CACHE.get(sf_dir)
-    if hit is None or hit[0] is not spark or hit[1] != fp:
-        _GRAPH_CACHE[sf_dir] = (spark, fp, bipartite_graph_encoded(spark, sf_dir))
-    return _GRAPH_CACHE[sf_dir][2]
+    return memo.in_session(
+        "bipartite_graph",
+        spark,
+        sf_dir,
+        ("lineitem", "orders"),
+        lambda: bipartite_graph_encoded(spark, sf_dir),
+    )
 
 
 _EDGES_SQL = """
@@ -842,31 +830,16 @@ ed AS MATERIALIZED (
 
 # g11/g12/g13/g14/g15 all derive from the SAME top-3 trade graph: build
 # the 4-table join + window ONCE per (session, sf_dir) and localCheckpoint
-# the two tiny frames (25 vertices / <=75 edges) -- the _GRAPH_CACHE
-# treatment above, which saves ~2s of duplicated fact-join work per entry.
-# Keyed by (sf_dir, content fingerprint of the four source tables): a
-# path-only key would silently serve a stale checkpointed graph if the
-# parquet under an sf_dir is regenerated in-place within one session
-# (e.g. a drift-variant sweep reusing a directory) -- the r10 ADVICE item.
-_TRADE_GRAPH_CACHE: dict[
-    str, tuple[SparkSession, tuple, tuple[DataFrame, DataFrame]]
-] = {}
-
-_TRADE_TABLES = ("lineitem", "orders", "customer", "supplier")
-
-
+# the two tiny frames (25 vertices / <=75 edges), which saves ~2s of
+# duplicated fact-join work per entry.
 def _top3_trade_graph(spark: SparkSession, sf_dir: str):
-    from ..sources.readers import table_fingerprint
-
-    # session-keyed for the same reason as _shared_graph, and fingerprinted
-    # for the same reason too: in-place regeneration of any of the four
-    # source tables within one process must rebuild, never serve the stale
-    # checkpointed graph (r10 ADVICE); replacement drops the old reference.
-    fp = table_fingerprint(sf_dir, _TRADE_TABLES)
-    hit = _TRADE_GRAPH_CACHE.get(sf_dir)
-    if hit is None or hit[0] is not spark or hit[1] != fp:
-        _TRADE_GRAPH_CACHE[sf_dir] = (spark, fp, _build_top3_trade_graph(spark, sf_dir))
-    return _TRADE_GRAPH_CACHE[sf_dir][2]
+    return memo.in_session(
+        "trade_graph",
+        spark,
+        sf_dir,
+        ("lineitem", "orders", "customer", "supplier", "nation"),
+        lambda: _build_top3_trade_graph(spark, sf_dir),
+    )
 
 
 def _build_top3_trade_graph(spark: SparkSession, sf_dir: str):

@@ -24,37 +24,15 @@ unsorted original layout).
 
 from __future__ import annotations
 
-import atexit
 import glob
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+from . import memo
 from .catalog import disc_money_sum_spark, money_sum_spark, grid_mean_spark, grid_mean_sql, register
-
-# One clustered copy per (sf_dir) per process, reclaimed at exit
-# (same lifecycle pattern as streamq's replay staging). Keys carry a
-# content fingerprint of the source table (r10 ADVICE, applied uniformly):
-# in-place regeneration of the parquet re-stages instead of silently
-# reusing a stale clustered copy.
-_CLUSTERED: dict[tuple, str] = {}
-
-
-def _li_fp(sf_dir: str) -> tuple:
-    from ..sources.readers import table_fingerprint
-
-    return table_fingerprint(sf_dir, ("lineitem",))
-
-
-@atexit.register
-def _cleanup_clustered() -> None:
-    for d in _CLUSTERED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _CLUSTERED.clear()
 
 
 def write_clustered(
@@ -72,12 +50,11 @@ def write_clustered(
 
 
 def clustered_lineitem_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _li_fp(sf_dir))
-    if key not in _CLUSTERED:
-        d = tempfile.mkdtemp(prefix="mras_clustered_")
+    def write(d: str) -> str:
         write_clustered(load_table(spark, sf_dir, "lineitem"), d, "l_shipdate")
-        _CLUSTERED[key] = d
-    return _CLUSTERED[key]
+        return d
+
+    return memo.staged("clustered_lineitem", sf_dir, ("lineitem",), write)
 
 
 def zorder_key(col_a: F.Column, col_b: F.Column, bits: int = 16) -> F.Column:
@@ -151,15 +128,14 @@ def write_zordered(
 
 
 def zordered_lineitem_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (f"z::{sf_dir}", _li_fp(sf_dir))
-    if key not in _CLUSTERED:
-        d = tempfile.mkdtemp(prefix="mras_zorder_")
+    def write(d: str) -> str:
         li = load_table(spark, sf_dir, "lineitem").withColumn(
             "__ship_epoch", F.col("l_shipdate").cast("timestamp").cast("long")
         )
         write_zordered(li, d, "__ship_epoch", "l_partkey", drop_after=("__ship_epoch",))
-        _CLUSTERED[key] = d
-    return _CLUSTERED[key]
+        return d
+
+    return memo.staged("zorder_lineitem", sf_dir, ("lineitem",), write)
 
 
 # --------------------------------------------------------------------------
@@ -264,20 +240,20 @@ def compact_parquet(
     return n
 
 
-def _fragmented_then_compacted(spark: SparkSession, sf_dir: str) -> str:
+def _fragmented_then_compacted(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Stage q52's fixture: lineitem shattered into 64 shards, then
-    compacted back down by byte-size target."""
-    key = (f"c::{sf_dir}", _li_fp(sf_dir))
-    if key not in _CLUSTERED:
-        frag = tempfile.mkdtemp(prefix="mras_frag_")
-        comp = tempfile.mkdtemp(prefix="mras_compact_")
-        _CLUSTERED[(f"cf::{sf_dir}", _li_fp(sf_dir))] = frag
-        _CLUSTERED[key] = comp
+    compacted back down by byte-size target. Returns (fragmented,
+    compacted) dirs."""
+
+    def write(d: str) -> tuple[str, str]:
+        frag, comp = f"{d}/frag", f"{d}/compact"
         load_table(spark, sf_dir, "lineitem").repartition(64).write.mode(
             "overwrite"
         ).parquet(frag)
         compact_parquet(spark, frag, comp, target_file_bytes=8 << 20)
-    return _CLUSTERED[key]
+        return frag, comp
+
+    return memo.staged("fragmented_lineitem", sf_dir, ("lineitem",), write)
 
 
 # --------------------------------------------------------------------------
@@ -299,7 +275,7 @@ GROUP BY l_linestatus
 """,
 )
 def q52_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _fragmented_then_compacted(spark, sf_dir)
+    _, d = _fragmented_then_compacted(spark, sf_dir)
     return (
         spark.read.parquet(d)
         .groupBy("l_linestatus")
@@ -319,17 +295,13 @@ def q52_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rarely controls its upstream: a lakehouse reads what it is given.
 # --------------------------------------------------------------------------
 
-_ORC: dict[tuple, str] = {}
-
 
 def _orc_copy(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _li_fp(sf_dir))
-    if key not in _ORC:
-        d = tempfile.mkdtemp(prefix="mras_orc_")
+    def write(d: str) -> str:
         load_table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(d)
-        _ORC[key] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return _ORC[key]
+        return d
+
+    return memo.staged("orc_lineitem", sf_dir, ("lineitem",), write)
 
 
 @register(
@@ -368,20 +340,14 @@ def q72_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # proving longs/doubles/strings/dates survive the text round-trip.
 # --------------------------------------------------------------------------
 
-_JSONL: dict[tuple, tuple] = {}
-
 
 def _jsonl_copy(spark: SparkSession, sf_dir: str):
-    from ..sources.readers import table_fingerprint
-
-    key = (sf_dir, table_fingerprint(sf_dir, ("orders",)))
-    if key not in _JSONL:
-        d = tempfile.mkdtemp(prefix="mras_jsonl_")
+    def write(d: str):
         src = load_table(spark, sf_dir, "orders")
         src.write.mode("overwrite").json(d)
-        _JSONL[key] = (d, src.schema)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return _JSONL[key]
+        return d, src.schema
+
+    return memo.staged("jsonl_orders", sf_dir, ("orders",), write)
 
 
 @register(
@@ -421,15 +387,9 @@ def q76_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unit-tested.
 # --------------------------------------------------------------------------
 
-_DAT: dict[tuple, str] = {}
-
 
 def _dat_copy(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.readers import table_fingerprint
-
-    key = (sf_dir, table_fingerprint(sf_dir, ("orders",)))
-    if key not in _DAT:
-        d = tempfile.mkdtemp(prefix="mras_dat_")
+    def write(d: str) -> str:
         orders = load_table(spark, sf_dir, "orders")
         (
             orders.select(
@@ -459,9 +419,9 @@ def _dat_copy(spark: SparkSession, sf_dir: str) -> str:
         # drop Spark's _SUCCESS marker: the dat reader globs every file
         for junk in glob.glob(os.path.join(d, "_*")):
             os.remove(junk)
-        _DAT[key] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return _DAT[key]
+        return d
+
+    return memo.staged("dat_orders", sf_dir, ("orders",), write)
 
 
 @register(

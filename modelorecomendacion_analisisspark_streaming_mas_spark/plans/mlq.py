@@ -15,44 +15,21 @@ from ..ml.recommend import (
     item_factor_matrix,
     ratings_from_testdata,
 )
+from . import memo
 from .catalog import register
 
-# One ALS fit per (SparkContext, sf_dir): m01/m02 share the trained model.
-# Keyed by applicationId (the same per-context key shipping.py uses), not
-# just sf_dir: a fitted ALSModel and a cached ratings frame belong to the
-# JVM context that built them -- handing either to a query running on a
-# DIFFERENT context would cross-contaminate (or crash on a stopped
-# context) in a multi-session harness (VERDICT r3 watch-item). A
-# stopped-then-recreated context gets a fresh applicationId, so a stale
-# model can never be served to it.
-_MODELS: dict[tuple[str, str], object] = {}
 
-
-def _model_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
+# One ALS fit per (session, sf_dir): m01/m02 share the trained model.
 def _fitted(spark: SparkSession, sf_dir: str):
-    key = _model_key(spark, sf_dir)
-    if key not in _MODELS:
+    def fit():
         ratings = ratings_from_testdata(spark, sf_dir).cache()
         model = build_als(rank=8, max_iter=8).fit(ratings)
         # collect the factor matrix once: ALSModel.itemFactors re-derives
         # its lineage on every access, so repeated collects re-pay the cost
         ids, Y = item_factor_matrix(model)
-        _MODELS[key] = (model, ratings, ids, Y)
-    return _MODELS[key]
+        return model, ratings, ids, Y
 
-
-def reset_model_cache(spark: SparkSession | None = None) -> None:
-    """Drop cached fits -- all of them, or only one context's (explicit
-    hook for harnesses that recycle processes across sessions)."""
-    if spark is None:
-        _MODELS.clear()
-        return
-    app_id = spark.sparkContext.applicationId
-    for key in [k for k in _MODELS if k[0] == app_id]:
-        del _MODELS[key]
+    return memo.in_session("als_fit", spark, sf_dir, ("lineitem", "orders"), fit)
 
 
 # --------------------------------------------------------------------------

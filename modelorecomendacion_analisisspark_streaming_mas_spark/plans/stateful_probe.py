@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..compat import protobuf_shim
 from ..streaming.pipelines import EVENT_TIME_BOUND_SQL
+from . import memo
 from .catalog import register
 
 
@@ -42,37 +43,27 @@ FROM events GROUP BY event_type
 """
 
 
-# Key-cardinality cache: one distinct-count job per (SparkContext,
-# sf_dir, events fingerprint, key column) -- the same content-keyed
-# per-context pattern as graphq._shared_graph, so in-place regeneration
-# rebuilds and a different context never reads another's count.
-_KEYCARD_CACHE: dict[tuple, int] = {}
-
-
 def _key_cardinality(spark: SparkSession, sf_dir: str, col: str) -> int:
-    from ..sources.readers import load_events, table_fingerprint
+    """Distinct non-NULL count of one events column: one job per (session,
+    sf_dir, column), memoized."""
+    from ..sources.readers import load_events
 
-    key = (
-        spark.sparkContext.applicationId,
+    return memo.in_session(
+        ("keycard", col),
+        spark,
         sf_dir,
-        table_fingerprint(sf_dir, ("events",)),
-        col,
+        ("events",),
+        lambda: load_events(spark, sf_dir)
+        .filter(F.col(col).isNotNull())
+        .select(col)
+        .distinct()
+        .count(),
     )
-    if key not in _KEYCARD_CACHE:
-        _KEYCARD_CACHE[key] = (
-            load_events(spark, sf_dir)
-            .filter(F.col(col).isNotNull())
-            .select(col)
-            .distinct()
-            .count()
-        )
-    return _KEYCARD_CACHE[key]
 
 
 def _n_event_types(spark: SparkSession, sf_dir: str) -> int:
     """Distinct state-key cardinality for the per-type handlers (one cheap
-    column-pruned aggregate over the batch twin of the replay source,
-    cached per context + content fingerprint)."""
+    column-pruned aggregate over the batch twin of the replay source)."""
     return _key_cardinality(spark, sf_dir, "event_type")
 
 

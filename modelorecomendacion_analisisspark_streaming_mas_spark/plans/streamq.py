@@ -8,14 +8,13 @@ correctness checks at all, SURVEY section 5).
 
 from __future__ import annotations
 
-import atexit
 import datetime
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.numeric import cents_sum_spark, valid_cents_spark
 
@@ -40,31 +39,20 @@ from ..streaming.pipelines import (
     streaming_group_counts,
     tumbling_counts,
 )
+from . import memo
 from .catalog import register, shingle_rows_sql
 
 
-# Replay staging is deterministic per (sf_dir, copies): stage once per
-# process and reuse across queries (bench runs all six s* entries).
-# Staging copies are reclaimed at interpreter exit so a long-lived process
-# leaks nothing (one registration total, not one per dir). Every staging
-# key also carries a content fingerprint of the source table (r10 ADVICE
-# on the trade-graph cache, applied uniformly): in-place regeneration of
-# the parquet under an sf_dir within one process re-stages instead of
-# silently replaying the stale copy.
-_STAGED: dict[tuple, tuple[str, "object"]] = {}
+def _staged_replay(
+    spark: SparkSession, sf_dir: str, copies: int = 1, n_files: int | None = None
+) -> tuple[str, StructType]:
+    """(dir, schema) of the events replay staging, shared by every s* entry
+    that replays the same (copies, n_files) variant."""
 
+    def write(d: str) -> tuple[str, StructType]:
+        return d, stage_events_for_replay(spark, sf_dir, d, copies=copies, n_files=n_files)
 
-def _events_fp(sf_dir: str) -> tuple:
-    from ..sources.readers import table_fingerprint
-
-    return table_fingerprint(sf_dir, ("events",))
-
-
-@atexit.register
-def _cleanup_staged() -> None:
-    for d, _schema in _STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED.clear()
+    return memo.staged(("replay", copies, n_files), sf_dir, ("events",), write)
 
 
 def _replayed(
@@ -74,12 +62,7 @@ def _replayed(
     max_files_per_trigger: int | None = None,
     n_files: int | None = None,
 ) -> DataFrame:
-    key = (sf_dir, copies, n_files, _events_fp(sf_dir))
-    if key not in _STAGED:
-        d = tempfile.mkdtemp(prefix="mras_stream_")
-        schema = stage_events_for_replay(spark, sf_dir, d, copies=copies, n_files=n_files)
-        _STAGED[key] = (d, schema)
-    d, schema = _STAGED[key]
+    d, schema = _staged_replay(spark, sf_dir, copies, n_files)
     return file_stream(spark, d, schema, max_files_per_trigger=max_files_per_trigger)
 
 
@@ -214,7 +197,7 @@ def s05_stream_latest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         stream.writeStream.foreachBatch(compact)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="mras_ckpt_"))
+        .option("checkpointLocation", memo.scratch_dir("ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -473,22 +456,14 @@ _SENTINEL_TS = datetime.datetime(2025, 1, 1)  # > max events ts + watermark at e
 
 
 def _replayed_with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fp = _events_fp(sf_dir)
-    key = (sf_dir, -1, fp)  # distinct staging variant: 1 copy + sentinel row
-    if key not in _STAGED:
+    def write(d: str) -> tuple[str, StructType]:
         # Derive from the SHARED base staging instead of re-materializing
         # the events table: hard-link its parquet files into a fresh dir
         # and append only the one-row sentinel file. Saves a full
         # read+write of the events table per process (s01 and friends
         # have usually staged the base already; if not, stage it once
         # here so every later _replayed() call reuses it too).
-        base_key = (sf_dir, 1, None, fp)
-        if base_key not in _STAGED:
-            bd = tempfile.mkdtemp(prefix="mras_stream_")
-            bschema = stage_events_for_replay(spark, sf_dir, bd, copies=1)
-            _STAGED[base_key] = (bd, bschema)
-        bd, schema = _STAGED[base_key]
-        d = tempfile.mkdtemp(prefix="mras_stream_")
+        bd, schema = _staged_replay(spark, sf_dir)
         for f in os.listdir(bd):
             if f.endswith(".parquet"):
                 try:
@@ -516,8 +491,9 @@ def _replayed_with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, [tuple(sentinel_vals[f.name] for f in schema.fields)], schema
         )
         sentinel.write.mode("append").parquet(d)
-        _STAGED[key] = (d, schema)
-    d, schema = _STAGED[key]
+        return d, schema
+
+    d, schema = memo.staged("replay_sentinel", sf_dir, ("events",), write)
     return file_stream(spark, d, schema)
 
 
@@ -532,8 +508,7 @@ FROM events WHERE {EVENT_TIME_BOUND_SQL} GROUP BY win_start, event_type
 def s13_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed_with_sentinel(spark, sf_dir)
     agg = tumbling_counts(stream)
-    out_dir = tempfile.mkdtemp(prefix="mras_sink_")
-    _SINK_DIRS.append(out_dir)
+    out_dir = memo.scratch_dir("sink")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -628,9 +603,8 @@ def s15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(valid_cents_spark("value")).alias("sum_cents"),
         )
     )
-    table_dir = tempfile.mkdtemp(prefix="mras_mv_")
-    ckpt = tempfile.mkdtemp(prefix="mras_mv_ckpt_")
-    _SINK_DIRS.extend([table_dir, ckpt])
+    table_dir = memo.scratch_dir("mv")
+    ckpt = memo.scratch_dir("mv_ckpt")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -658,16 +632,6 @@ def s15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         (F.col("sum_cents") / F.lit(1e2)).alias("sum_value"),
     )
-
-
-_SINK_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_sinks() -> None:
-    for d in _SINK_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _SINK_DIRS.clear()
 
 
 def _sink_readback(spark: SparkSession, out_dir: str, schema_ddl: str) -> DataFrame:
@@ -711,9 +675,8 @@ GROUP BY route, event_type
 )
 def s16_stream_quality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir)
-    accept_dir = tempfile.mkdtemp(prefix="mras_route_a_")
-    reject_dir = tempfile.mkdtemp(prefix="mras_route_r_")
-    _SINK_DIRS.extend([accept_dir, reject_dir])
+    accept_dir = memo.scratch_dir("route_a")
+    reject_dir = memo.scratch_dir("route_r")
     ok = (F.col("event_type") != "error") & (F.col("value") >= 0.5)
     # Route rejects with the explicit complement, NULL-safe: a row with
     # NULL value/event_type makes `ok` NULL, and filter(ok)/filter(~ok)
@@ -863,31 +826,19 @@ def s20_stream_countmin_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # contract as the batch one.
 # --------------------------------------------------------------------------
 
-_MEDIA_STAGED: dict[tuple, str] = {}
-
 
 def _staged_media(spark: SparkSession, sf_dir: str) -> str:
     from ..functions.multimodal import synth_png_table
     from ..sources.readers import load_table
 
-    from ..sources.readers import table_fingerprint
-
-    key = (sf_dir, table_fingerprint(sf_dir, ("documents",)))
-    if key not in _MEDIA_STAGED:
-        d = tempfile.mkdtemp(prefix="mras_media_")
+    def write(d: str) -> str:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         synth_png_table(spark, docs, "doc_id", "text").write.mode(
             "overwrite"
         ).parquet(d)
-        _MEDIA_STAGED[key] = d
-    return _MEDIA_STAGED[key]
+        return d
 
-
-@atexit.register
-def _cleanup_media() -> None:
-    for d in _MEDIA_STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _MEDIA_STAGED.clear()
+    return memo.staged("media", sf_dir, ("documents",), write)
 
 
 def _s23_oracle() -> str:
@@ -1011,8 +962,7 @@ def s24_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.value").alias("value"),
         )
     )
-    table_dir = tempfile.mkdtemp(prefix="mras_upsert_")
-    _SINK_DIRS.append(table_dir)
+    table_dir = memo.scratch_dir("upsert")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -1075,9 +1025,7 @@ def s25_stream_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the exemplar doesn't need to push the full table through it,
     # and pushing the filter/projection into staging cuts both the stage
     # write and the per-batch serialization 4x.
-    key = (f"{sf_dir}#s25_quarter", _events_fp(sf_dir))
-    if key not in _DOC_STAGED:
-        d = tempfile.mkdtemp(prefix="mras_s25_stage_")
+    def write(d: str) -> str:
         (
             load_events(spark, sf_dir)
             .filter(F.col("user_id") % 4 == 0)
@@ -1086,12 +1034,13 @@ def s25_stream_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _DOC_STAGED[key] = d
+        return d
+
+    staged = memo.staged("s25_quarter_events", sf_dir, ("events",), write)
     # footer-derived schema via the shared helper (regeneration-proof);
     # 4 files / 2 per trigger = 2 real micro-batches
-    stream = _staged_replay_stream(spark, _DOC_STAGED[key], max_files_per_trigger=2)
-    out_dir = tempfile.mkdtemp(prefix="mras_jsonl_sink_")
-    _SINK_DIRS.append(out_dir)
+    stream = _staged_replay_stream(spark, staged, max_files_per_trigger=2)
+    out_dir = memo.scratch_dir("jsonl_sink")
     q = (
         # widen the Python writer: without this the write stage inherits
         # the scan's 2 tasks (one per staged file), serializing the
@@ -1130,16 +1079,6 @@ def s25_stream_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # maintainable at 100 TB: per-batch cost tracks the batch.
 # --------------------------------------------------------------------------
 
-_DOC_STAGED: dict[tuple, str] = {}
-
-
-@atexit.register
-def _cleanup_doc_staged() -> None:
-    for d in _DOC_STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _DOC_STAGED.clear()
-
-
 def _staged_replay_stream(
     spark: SparkSession, staged_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
@@ -1176,11 +1115,7 @@ def _staged_new_docs(spark: SparkSession, sf_dir: str) -> str:
     exercised."""
     from ..sources.readers import load_table
 
-    from ..sources.readers import table_fingerprint
-
-    key = (sf_dir, table_fingerprint(sf_dir, ("documents",)))
-    if key not in _DOC_STAGED:
-        d = tempfile.mkdtemp(prefix="mras_docstream_")
+    def write(d: str) -> str:
         (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 2 == 1)
@@ -1189,8 +1124,9 @@ def _staged_new_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _DOC_STAGED[key] = d
-    return _DOC_STAGED[key]
+        return d
+
+    return memo.staged("new_docs", sf_dir, ("documents",), write)
 
 
 def _s26_oracle() -> str:
@@ -1234,8 +1170,7 @@ def s26_stream_lsh_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("dup_of"), F.col("shingle_set").alias("set_i")
     )
     staged = _staged_new_docs(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="mras_s26_out_")
-    _SINK_DIRS.append(out_dir)
+    out_dir = memo.scratch_dir("s26_out")
     stream = _staged_replay_stream(spark, staged)
 
     def probe(batch_df, epoch_id):
@@ -1474,27 +1409,16 @@ SELECT cid, n_vectors,
 FROM counts
 """
 
-_EMB_STAGED: dict[tuple, str] = {}
-
 # last run's partials store, exposed so tests can pin the per-batch
 # O(#centroids) append contract (the incremental property itself)
 _S28_LAST_PARTS_DIR: str | None = None
 
 
-@atexit.register
-def _cleanup_emb_staged() -> None:
-    for d in _EMB_STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _EMB_STAGED.clear()
-
-
 def _staged_embeddings(spark: SparkSession, sf_dir: str) -> str:
     """Full embeddings table split across 4 parquet files for replay."""
-    from ..sources.readers import load_table, table_fingerprint
+    from ..sources.readers import load_table
 
-    key = (sf_dir, table_fingerprint(sf_dir, ("embeddings",)))
-    if key not in _EMB_STAGED:
-        d = tempfile.mkdtemp(prefix="mras_embstream_")
+    def write(d: str) -> str:
         (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
@@ -1502,8 +1426,9 @@ def _staged_embeddings(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _EMB_STAGED[key] = d
-    return _EMB_STAGED[key]
+        return d
+
+    return memo.staged("embeddings_replay", sf_dir, ("embeddings",), write)
 
 
 @register(
@@ -1533,8 +1458,7 @@ def s28_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     staged = _staged_embeddings(spark, sf_dir)
-    parts_dir = tempfile.mkdtemp(prefix="mras_s28_parts_")
-    _SINK_DIRS.append(parts_dir)
+    parts_dir = memo.scratch_dir("s28_parts")
     stream = _staged_replay_stream(spark, staged)
 
     def ingest(batch_df, epoch_id):
@@ -1559,8 +1483,7 @@ def s28_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(parts_dir)
         )
 
-    ckpt = tempfile.mkdtemp(prefix="mras_s28_ckpt_")
-    _SINK_DIRS.append(ckpt)
+    ckpt = memo.scratch_dir("s28_ckpt")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -1717,8 +1640,7 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
             "unbounded -- increase centroid count (lower stride) and re-cluster"
         )
     staged = _staged_embeddings(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="mras_s29_out_")
-    _SINK_DIRS.append(out_dir)
+    out_dir = memo.scratch_dir("s29_out")
     stream = _staged_replay_stream(spark, staged).filter(F.col("vec_id") % 2 == 1)
 
     def probe(batch_df, epoch_id):
@@ -1874,8 +1796,7 @@ def s30_stream_cdc_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     staged = _staged_new_docs(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="mras_s30_out_")
-    _SINK_DIRS.append(out_dir)
+    out_dir = memo.scratch_dir("s30_out")
     stream = _staged_replay_stream(spark, staged)
 
     def probe(batch_df, epoch_id):
@@ -2006,24 +1927,12 @@ def s31_stream_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source -- equal to d06's batch answer (shared oracle, verbatim).
 # --------------------------------------------------------------------------
 
-_CORPUS_STAGED: dict[tuple, str] = {}
-
-
-@atexit.register
-def _cleanup_corpus_staged() -> None:
-    for d in _CORPUS_STAGED.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _CORPUS_STAGED.clear()
-
-
 def _staged_corpus_docs(spark: SparkSession, sf_dir: str) -> str:
     """Non-benchmark documents (doc_id % 97 != 0) split across 2 parquet
     files for replay (the s26 2-batch rationale)."""
-    from ..sources.readers import load_table, table_fingerprint
+    from ..sources.readers import load_table
 
-    key = (sf_dir, table_fingerprint(sf_dir, ("documents",)))
-    if key not in _CORPUS_STAGED:
-        d = tempfile.mkdtemp(prefix="mras_corpusstream_")
+    def write(d: str) -> str:
         (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 97 != 0)
@@ -2032,8 +1941,9 @@ def _staged_corpus_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _CORPUS_STAGED[key] = d
-    return _CORPUS_STAGED[key]
+        return d
+
+    return memo.staged("corpus_docs", sf_dir, ("documents",), write)
 
 
 from .curation import _D06_ORACLE, _DUCK_H32  # noqa: E402  (oracle twin, same
@@ -2107,8 +2017,7 @@ def s32_stream_contamination_probe(spark: SparkSession, sf_dir: str) -> DataFram
         .localCheckpoint(eager=True)
     )
     staged = _staged_corpus_docs(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="mras_s32_out_")
-    _SINK_DIRS.append(out_dir)
+    out_dir = memo.scratch_dir("s32_out")
     stream = _staged_replay_stream(spark, staged)
 
     def probe(batch_df, epoch_id):
@@ -2250,8 +2159,7 @@ def s33_stream_ngram_jaccard_probe(spark: SparkSession, sf_dir: str) -> DataFram
         docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", threshold=0.5
     )
     staged = _staged_new_docs(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="mras_s33_out_")
-    _SINK_DIRS.append(out_dir)
+    out_dir = memo.scratch_dir("s33_out")
     stream = _staged_replay_stream(spark, staged)
 
     def probe(batch_df, epoch_id):

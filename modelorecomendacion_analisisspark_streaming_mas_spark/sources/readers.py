@@ -71,6 +71,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 # fixed cost with margin. Below the floor the serialized compute is
 # cheaper than the spread; above it (any real corpus -- at 100 TB a scan
 # is thousands of splits and spread() no-ops anyway) the widening pays.
+# The gate compares against Catalyst's parquet sizeInBytes, which is the
+# COMPRESSED on-disk file size, not the logical row bytes. The 8 MB floor
+# is therefore conservative: a well-compressed corpus crosses it only at
+# more rows (and more serial encode time) than the arithmetic above
+# assumes.
 PY_CHAIN_SPREAD_MIN_BYTES = 8 << 20
 
 
@@ -132,8 +137,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def table_fingerprint(sf_dir: str, names: tuple[str, ...]) -> tuple:
-    """Cheap driver-side content key for process-lifetime caches of
-    frames/staging dirs DERIVED from an sf_dir's tables: the sorted
+    """Cheap driver-side content key for plans/memo.py's process-lifetime
+    memo of frames/staging dirs DERIVED from an sf_dir's tables: the sorted
     (relative path, size, mtime_ns) of every data file under each
     ``{table}.parquet`` (file or directory). A path-only cache key would
     silently serve stale derived data if the parquet under an sf_dir is

@@ -372,25 +372,6 @@ def test_g09_lpa_matches_python_reference_on_random_graphs(spark):
         assert got == lab, (trial, edges, got, lab)
 
 
-def test_trade_graph_cache_is_session_keyed(spark, sf_dir):
-    """g11-g15 share the top-3 trade graph: the same (session, sf_dir)
-    must return the SAME materialized frames (no duplicated 4-table
-    build), while a foreign/dead session identity in the cache forces a
-    rebuild -- the checkpointed blocks live in ONE session's block
-    manager, so handing them to another session would dangle."""
-    from modelorecomendacion_analisisspark_streaming_mas_spark.plans import graphq
-
-    graphq._TRADE_GRAPH_CACHE.clear()
-    v1, e1 = graphq._top3_trade_graph(spark, sf_dir)
-    v2, e2 = graphq._top3_trade_graph(spark, sf_dir)
-    assert v1 is v2 and e1 is e2
-    graphq._TRADE_GRAPH_CACHE[sf_dir] = (object(), (v1, e1))
-    v3, e3 = graphq._top3_trade_graph(spark, sf_dir)
-    assert v3 is not v1
-    assert v3.count() == 25 and 0 < e3.count() <= 75  # <=3 partners/nation
-    graphq._TRADE_GRAPH_CACHE.clear()
-
-
 def test_g15_entry_structural_invariants(spark, sf_dir):
     """g15 acceptance, structural at ANY data: 25 nations out, each
     source nation keeps at least its reset mass (0.15 teleports only to

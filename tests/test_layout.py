@@ -106,14 +106,10 @@ def test_compaction_collapses_files(spark, sf_dir):
     import os
 
     from modelorecomendacion_analisisspark_streaming_mas_spark.plans.layout import (
-        _CLUSTERED,
         _fragmented_then_compacted,
-        _li_fp,
     )
 
-    comp = _fragmented_then_compacted(spark, sf_dir)
-    # staging keys carry a content fingerprint since r11 (stale-cache fix)
-    frag = _CLUSTERED[(f"cf::{sf_dir}", _li_fp(sf_dir))]
+    frag, comp = _fragmented_then_compacted(spark, sf_dir)
     n_frag = len(glob.glob(os.path.join(frag, "*.parquet")))
     n_comp = len(glob.glob(os.path.join(comp, "*.parquet")))
     assert n_frag == 64

@@ -198,31 +198,29 @@ def test_implicit_als_prefers_interacted_items(spark, sf_dir):
     assert mean_pos > mean_neg + 0.05, (mean_pos, mean_neg)
 
 
-def test_model_cache_scoped_per_context_and_resettable(spark, sf_dir):
-    """The m01/m02 model cache must key on (applicationId, sf_dir) -- a
-    different SparkContext can never be served another context's fit
-    (VERDICT r3 watch-item) -- and expose an explicit reset hook."""
-    from types import SimpleNamespace
-
+def test_model_cache_scoped_per_session(tmp_path, monkeypatch):
+    """m01/m02 share one ALS fit per (session, sf_dir): the same session
+    reuses it, and a different session is never served another session's
+    fit (its model and cached ratings live in that session's context).
+    The fit itself is faked: this pins the keying, not ALS."""
     from modelorecomendacion_analisisspark_streaming_mas_spark.plans import mlq
 
-    a = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-A"))
-    b = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-B"))
-    assert mlq._model_key(a, "/d") != mlq._model_key(b, "/d")
-    assert mlq._model_key(a, "/d") == ("app-A", "/d")
+    class Fake:
+        def cache(self):
+            return self
 
-    saved = dict(mlq._MODELS)
-    try:
-        mlq._MODELS.clear()
-        mlq._MODELS[mlq._model_key(a, "/d")] = "fit-A"
-        mlq._MODELS[mlq._model_key(b, "/d")] = "fit-B"
-        mlq.reset_model_cache(a)  # only context A's entries drop
-        assert list(mlq._MODELS.values()) == ["fit-B"]
-        mlq.reset_model_cache()  # full reset
-        assert not mlq._MODELS
-    finally:
-        mlq._MODELS.clear()
-        mlq._MODELS.update(saved)
+        def fit(self, ratings):
+            return object()
+
+    monkeypatch.setattr(mlq, "ratings_from_testdata", lambda spark, sf_dir: Fake())
+    monkeypatch.setattr(mlq, "build_als", lambda **kw: Fake())
+    monkeypatch.setattr(mlq, "item_factor_matrix", lambda model: ([], None))
+    session_a, session_b, d = object(), object(), str(tmp_path)
+    fit_a = mlq._fitted(session_a, d)
+    assert mlq._fitted(session_a, d) is fit_a
+    fit_b = mlq._fitted(session_b, d)
+    assert fit_b[0] is not fit_a[0]
+    assert mlq._fitted(session_b, d) is fit_b
 
 
 def test_item_factor_collect_guard(model_rmse, monkeypatch):
@@ -238,7 +236,7 @@ def test_item_factor_collect_guard(model_rmse, monkeypatch):
         R.item_factor_matrix(model)
 
 
-def test_m02_self_validation_catches_broken_fold_in(spark, sf_dir):
+def test_m02_self_validation_catches_broken_fold_in(spark, sf_dir, monkeypatch):
     """r14 VERDICT #3: the ALS entries are self-validating. m02 computes
     fold-in-vs-transform rank correlation in-query and RAISES below 0.7,
     so a deliberately broken fold-in (permuted factor rows -- scores no
@@ -261,14 +259,11 @@ def test_m02_self_validation_catches_broken_fold_in(spark, sf_dir):
     assert broken_corr is not None and broken_corr <= 0.7, broken_corr
 
     # and end-to-end: m02 with the broken factors cached raises
-    key = mlq._model_key(spark, sf_dir)
-    orig = mlq._MODELS[key]
-    try:
-        mlq._MODELS[key] = (model, ratings, ids, Y_broken)
-        with pytest.raises(AssertionError, match="m02 self-validation"):
-            mlq.m02_cold_start_fold_in(spark, sf_dir)
-    finally:
-        mlq._MODELS[key] = orig
+    monkeypatch.setattr(
+        mlq, "_fitted", lambda spark, sf_dir: (model, ratings, ids, Y_broken)
+    )
+    with pytest.raises(AssertionError, match="m02 self-validation"):
+        mlq.m02_cold_start_fold_in(spark, sf_dir)
 
 
 def test_als_family_emits_validation_columns(spark, sf_dir):

@@ -1006,25 +1006,18 @@ def test_probe_stream_with_no_new_docs_degrades_to_empty(
     empty frame), so the stream replays one zero-row micro-batch."""
     from modelorecomendacion_analisisspark_streaming_mas_spark.plans import (
         REGISTRY,
+        memo,
         streamq,
     )
 
-    d = tempfile.mkdtemp(prefix="mras_empty_staged_")
-    streamq._SINK_DIRS.append(d)
+    d = memo.scratch_dir("empty_staged")
     (
         spark.createDataFrame([], "doc_id bigint, text string")
         .repartition(1)
         .write.mode("overwrite")
         .parquet(d)
     )
-    from modelorecomendacion_analisisspark_streaming_mas_spark.sources.readers import (
-        table_fingerprint,
-    )
-
-    # staged keys carry a content fingerprint since r11 (stale-cache fix)
-    monkeypatch.setitem(
-        streamq._DOC_STAGED, (sf_dir, table_fingerprint(sf_dir, ("documents",))), d
-    )
+    monkeypatch.setattr(streamq, "_staged_new_docs", lambda spark, sf_dir: d)
     out = REGISTRY[entry].fn(spark, sf_dir)
     assert out.schema.simpleString() == result_schema
     assert out.count() == 0

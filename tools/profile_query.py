@@ -24,11 +24,19 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--queries", required=True)
-    ap.add_argument("--reps", type=int, default=3)
+    # >= 1: --explain-dir dumps the plan of the last timed repetition
+    ap.add_argument("--reps", type=_positive_int, default=3)
     ap.add_argument("--noop", action="store_true")
     ap.add_argument("--explain-dir", default="")
     ap.add_argument("--suffix", default="before")
