@@ -20,6 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compat import protobuf_shim
+from ..sources.streams import (
+    HEAVY_HANDLER_KEYS_PER_PARTITION,
+    derive_state_partitions,
+    run_available_now,
+)
 from ..streaming.pipelines import EVENT_TIME_BOUND_SQL
 from . import memo
 from .catalog import register
@@ -83,7 +88,6 @@ def _s10_stream_tws_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDFS-backed provider cannot host -- and RocksDB is the store you'd
     run at 100 TB anyway (incremental-changelog checkpointing, off-heap
     state)."""
-    from ..sources.streams import derive_state_partitions, run_to_memory_sink
     from ..streaming.stateful_v2 import running_count_sum_per_type
     from .streamq import _replayed
 
@@ -94,9 +98,10 @@ def _s10_stream_tws_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure per-micro-batch open/commit cost (measured 2.4x at sf0.1 for
     # 8 partitions over 5 keys; see derive_state_partitions). At real
     # scale the knob rises with keys until the session default governs.
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         out_stream,
-        "update",
+        "memory",
+        output_mode="update",
         shuffle_partitions=derive_state_partitions(spark, _n_event_types(spark, sf_dir)),
         rocksdb_state=True,
     )
@@ -129,16 +134,16 @@ def _s18_stream_tws_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; this one pins ORDER inside state)."""
     from pyspark.sql import Window
 
-    from ..sources.streams import derive_state_partitions, run_to_memory_sink
     from ..streaming.stateful_v2 import latest_k_per_type
     from .streamq import _replayed
 
     stream = _replayed(spark, sf_dir)
     out_stream = latest_k_per_type(stream, k=3)
     # key-derived state parallelism: see the sizing note in s10.
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         out_stream,
-        "update",
+        "memory",
+        output_mode="update",
         shuffle_partitions=derive_state_partitions(spark, _n_event_types(spark, sf_dir)),
         rocksdb_state=True,
     )
@@ -175,16 +180,16 @@ def _s19_stream_tws_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission per key equals the batch two-column groupBy count."""
     from pyspark.sql import Window
 
-    from ..sources.streams import derive_state_partitions, run_to_memory_sink
     from ..streaming.stateful_v2 import bucket_counts_per_type
     from .streamq import _replayed
 
     stream = _replayed(spark, sf_dir)
     out_stream = bucket_counts_per_type(stream, n_buckets=10)
     # key-derived state parallelism: see the sizing note in s10.
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         out_stream,
-        "update",
+        "memory",
+        output_mode="update",
         shuffle_partitions=derive_state_partitions(spark, _n_event_types(spark, sf_dir)),
         rocksdb_state=True,
     )
@@ -205,7 +210,6 @@ def _s21_stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch result -- the oracle IS q68's SQL."""
     from pyspark.sql import Window
 
-    from ..sources.streams import run_to_memory_sink
     from ..streaming.stateful_v2 import funnel_stage_per_user
     from .streamq import _replayed
 
@@ -218,14 +222,10 @@ def _s21_stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch), so parallelism wins right up to the key count (16 measured
     # ~4.8s -> ~3.4s over 4 at sf0.1); the partition count never changes
     # WHAT is emitted.
-    from ..sources.streams import (
-        HEAVY_HANDLER_KEYS_PER_PARTITION,
-        derive_state_partitions,
-    )
-
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         out_stream,
-        "update",
+        "memory",
+        output_mode="update",
         shuffle_partitions=derive_state_partitions(
             spark,
             _n_users(spark, sf_dir),
@@ -283,7 +283,6 @@ def _s22_stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     which the replay's far-future sentinel guarantees. Every emitted row
     is one closed session exactly once (append mode), so the aggregated
     sink equals the batch gaps-and-islands oracle."""
-    from ..sources.streams import run_to_memory_sink
     from ..streaming.stateful_v2 import timer_sessionize_per_user
     from .streamq import _replayed_with_sentinel
 
@@ -296,14 +295,9 @@ def _s22_stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real work (sort + gap walk per user) and parallelism wins up to
     # the key count (16 measured 9.3s -> ~4s over 4 at sf0.1; the
     # partition count never changes WHAT is emitted, only where).
-    from ..sources.streams import (
-        HEAVY_HANDLER_KEYS_PER_PARTITION,
-        derive_state_partitions,
-    )
-
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         out_stream,
-        "append",
+        "memory",
         shuffle_partitions=derive_state_partitions(
             spark,
             _n_users(spark, sf_dir),

@@ -11,6 +11,8 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,9 +22,9 @@ from ..functions.numeric import cents_sum_spark, valid_cents_spark
 
 from ..sources.readers import local_rows_df
 from ..sources.streams import (
-    REPLAY_STATE_PARTITIONS,
+    REPLAY_SHUFFLE_PARTITIONS,
     file_stream,
-    run_to_memory_sink,
+    run_available_now,
     stage_events_for_replay,
 )
 from ..streaming.stateful import longest_run_per_user
@@ -84,8 +86,12 @@ FROM events WHERE {EVENT_TIME_BOUND_SQL} GROUP BY win_start, event_type
 )
 def s01_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir)
-    _, out = run_to_memory_sink(tumbling_counts(stream), "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
-    return out
+    return run_available_now(
+        tumbling_counts(stream),
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -111,8 +117,12 @@ FROM w GROUP BY win_start, event_type
 )
 def s02_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir)
-    _, out = run_to_memory_sink(sliding_counts(stream), "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
-    return out
+    return run_available_now(
+        sliding_counts(stream),
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -138,7 +148,12 @@ FROM m GROUP BY user_id
 )
 def s03_stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir)
-    _, sessions = run_to_memory_sink(sessionized_counts(stream), "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    sessions = run_available_now(
+        sessionized_counts(stream),
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
     return sessions.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum("n_events").alias("n_events"),
@@ -162,8 +177,12 @@ GROUP BY event_type""",
 )
 def s04_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir, copies=2)
-    _, out = run_to_memory_sink(stream_dedup_counts(stream), "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
-    return out
+    return run_available_now(
+        stream_dedup_counts(stream),
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -195,13 +214,7 @@ def s05_stream_latest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.sort(key=lambda r: (r["ts"], r["event_id"]), reverse=True)
         snapshot[:] = merged[:k]
 
-    q = (
-        stream.writeStream.foreachBatch(compact)
-        .option("checkpointLocation", memo.scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, compact)
     out = spark.createDataFrame(snapshot, schema=stream.schema)
     return out.select(
         "event_id",
@@ -225,12 +238,12 @@ FROM events GROUP BY event_type, user_id
 )
 def s06_stream_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir)
-    _, out = run_to_memory_sink(
+    return run_available_now(
         streaming_group_counts(stream, "event_type", "user_id"),
-        "complete",
-        shuffle_partitions=REPLAY_STATE_PARTITIONS,
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
     )
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -255,8 +268,7 @@ def s07_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = _replayed(spark, sf_dir).filter(F.col("event_type") == "click")
     purchases = _replayed(spark, sf_dir).filter(F.col("event_type") == "purchase")
     joined = stream_stream_click_purchase_join(clicks, purchases, within="30 minutes")
-    _, out = run_to_memory_sink(joined, "append", shuffle_partitions=REPLAY_STATE_PARTITIONS)
-    return out
+    return run_available_now(joined, "memory", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS)
 
 
 # --------------------------------------------------------------------------
@@ -293,7 +305,9 @@ FROM m GROUP BY user_id
 def s12_stream_dynamic_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir)
     sessions = dynamic_sessionized_counts(stream)
-    _, out = run_to_memory_sink(sessions, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(
+        sessions, "memory", output_mode="complete", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS
+    )
     return out.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum("n_events").alias("n_events"),
@@ -328,8 +342,9 @@ def s11_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         cents_sum_spark("value").alias("sum_value"),
     )
-    _, out = run_to_memory_sink(agg, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
-    return out
+    return run_available_now(
+        agg, "memory", output_mode="complete", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS
+    )
 
 
 # --------------------------------------------------------------------------
@@ -355,7 +370,7 @@ GROUP BY event_type""",
 def s08_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed(spark, sf_dir, copies=2)
     deduped = stream_dedup_within_watermark(stream)
-    _, out = run_to_memory_sink(deduped, "append", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(deduped, "memory", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS)
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
 
@@ -417,7 +432,9 @@ def s09_stream_longest_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silently trusted).
     stream = _replayed(spark, sf_dir)
     runs = longest_run_per_user(stream)
-    _, out = run_to_memory_sink(runs, "update", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(
+        runs, "memory", output_mode="update", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS
+    )
     # n_events strictly increases per emission, so max_by picks each user's
     # final state even if availableNow split the replay into several batches.
     return out.groupBy("user_id").agg(
@@ -509,20 +526,7 @@ def s13_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed_with_sentinel(spark, sf_dir)
     agg = tumbling_counts(stream)
     out_dir = memo.scratch_dir("sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{out_dir}/_ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_available_now(agg, ("parquet", out_dir), shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS)
     return (
         spark.read.parquet(out_dir)
         # NULL-safe: a plain != also swallows rows whose event_type is
@@ -561,7 +565,7 @@ def s14_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = stream.filter(F.col("event_type").isin("click", "__sentinel__"))
     purchases = stream.filter(F.col("event_type").isin("purchase", "__sentinel__"))
     joined = stream_stream_left_outer_join(clicks, purchases, within="30 minutes")
-    _, out = run_to_memory_sink(joined, "append", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(joined, "memory", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS)
     # drop the sentinel's own join output by its type marker -- NOT by an
     # id-domain test (`user_id >= 0` silently dropped real clicks when the
     # r13 extremes variant put -2^63-adjacent longs into user_id)
@@ -604,22 +608,12 @@ def s15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     table_dir = memo.scratch_dir("mv")
-    ckpt = memo.scratch_dir("mv_ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.foreachBatch(
-                foreach_batch_incremental_rollup(table_dir, "day", ["day", "event_type"])
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_available_now(
+        agg,
+        foreach_batch_incremental_rollup(table_dir, "day", ["day", "event_type"]),
+        output_mode="update",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
     # partition-column type inference turns day back into a DATE; the
     # rollup's contract (and the oracle) is the string key it grouped by.
     # Explicit schema: a ZERO-batch stream (r12 empty-tables hostile
@@ -634,20 +628,41 @@ def s15_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sink_readback(spark: SparkSession, out_dir: str, schema_ddl: str) -> DataFrame:
-    """Read a foreachBatch parquet sink back with an EXPLICIT schema.
+def _append_epochs(
+    stream: DataFrame, per_batch: Callable[[DataFrame], Iterator[DataFrame]], schema_ddl: str
+) -> DataFrame:
+    """Run a foreachBatch probe over ``stream`` and return everything it
+    appended, as one frame with an ``epoch`` column.
 
-    With inference, a sink holding no footer-bearing part files fails
-    with 'unable to infer schema' instead of returning an empty frame.
-    A zero-MATCH batch still leaves one empty footer file (Spark writes
-    >= 1 file even for an AQE-empty result, verified on this version),
-    so the live trigger is a stream with zero micro-batches (e.g. an
-    empty staging dir under drift or a new scale) -- plus any future
-    Spark that stops writing empty files. The declared DDL is pinned to
-    what the probe writes (verified non-empty at 3 scales: a type
-    mismatch would fail the vectorized parquet read outright), so an
-    empty stream degrades to an empty DataFrame."""
-    return spark.read.schema(schema_ddl).parquet(out_dir)
+    ``per_batch(batch_df)`` is a generator that yields the batch's result
+    frame (of DDL ``schema_ddl``) once. The frame is tagged with the
+    micro-batch's epoch id and appended to one parquet dir; then the
+    generator resumes, so code after its ``yield`` releases per-batch
+    caches after the append. foreachBatch is at-least-once: a retried
+    micro-batch whose append already committed re-appends the same rows
+    under the same (stable-on-retry) epoch id, so each caller collapses
+    retries on read-back with its own epoch window.
+
+    The read-back takes an EXPLICIT schema. With inference, a sink holding
+    no footer-bearing part files fails with 'unable to infer schema'
+    instead of returning an empty frame. A zero-MATCH batch still leaves
+    one empty footer file (Spark writes >= 1 file even for an AQE-empty
+    result, verified on this version), so the live trigger is a stream
+    with zero micro-batches (e.g. an empty staging dir under drift or a
+    new scale) -- plus any future Spark that stops writing empty files.
+    The declared DDL is pinned to what the probe writes (verified
+    non-empty at 3 scales: a type mismatch would fail the vectorized
+    parquet read outright), so an empty stream degrades to an empty
+    DataFrame."""
+    out_dir = memo.scratch_dir("probe_out")
+
+    def append(batch_df: DataFrame, epoch_id: int) -> None:
+        with contextmanager(per_batch)(batch_df) as found:
+            tagged = found.withColumn("epoch", F.lit(int(epoch_id)))
+            tagged.write.mode("append").parquet(out_dir)
+
+    run_available_now(stream, append, shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS)
+    return stream.sparkSession.read.schema(f"{schema_ddl}, epoch INT").parquet(out_dir)
 
 
 # --------------------------------------------------------------------------
@@ -691,13 +706,7 @@ def s16_stream_quality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch.filter(accept).write.mode("append").parquet(accept_dir)
         batch.filter(~accept).write.mode("append").parquet(reject_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", f"{accept_dir}/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, route)
     routed = (
         spark.read.parquet(accept_dir).withColumn("route", F.lit("accept"))
     ).unionByName(
@@ -748,7 +757,9 @@ def s17_stream_static_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = clean.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), cents_sum_spark("value").alias("sum_value")
     )
-    _, out = run_to_memory_sink(agg, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(
+        agg, "memory", output_mode="complete", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS
+    )
     return out.select("event_type", F.col("n").cast("long").alias("n"), "sum_value")
 
 
@@ -809,7 +820,9 @@ def s20_stream_countmin_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c.j").alias("j"), F.col("c.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    _, out = run_to_memory_sink(cells, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(
+        cells, "memory", output_mode="complete", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS
+    )
     return out.select("j", "bucket", F.col("cnt").cast("long").alias("cnt"))
 
 
@@ -874,7 +887,6 @@ def s23_stream_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_image,
         extract_image_features,
     )
-    from ..sources.streams import run_to_memory_sink
 
     d = _staged_media(spark, sf_dir)
     stream = spark.readStream.schema(_parse_datatype_string(IMAGE_SCHEMA)).parquet(d)
@@ -905,7 +917,9 @@ def s23_stream_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("_energy_c"),
         )
     )
-    _, out = run_to_memory_sink(agg, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    out = run_available_now(
+        agg, "memory", output_mode="complete", shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS
+    )
     # exact integer half-away cents from the 1e-4-grid energy sum (r13
     # money-sum discipline; the old double sum of 4dp-rounded values was
     # engine-order-dependent)
@@ -963,21 +977,12 @@ def s24_stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     table_dir = memo.scratch_dir("upsert")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            latest.writeStream.foreachBatch(
-                foreach_batch_incremental_rollup(table_dir, "bucket", ["user_id"])
-            )
-            .outputMode("update")
-            .option("checkpointLocation", f"{table_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_available_now(
+        latest,
+        foreach_batch_incremental_rollup(table_dir, "bucket", ["user_id"]),
+        output_mode="update",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
     # explicit schema: zero-batch streams leave no footers (see s15)
     return spark.read.schema(
         "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING,"
@@ -1041,20 +1046,11 @@ def s25_stream_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 files / 2 per trigger = 2 real micro-batches
     stream = _staged_replay_stream(spark, staged, max_files_per_trigger=2)
     out_dir = memo.scratch_dir("jsonl_sink")
-    q = (
-        # widen the Python writer: without this the write stage inherits
-        # the scan's 2 tasks (one per staged file), serializing the
-        # row-at-a-time json.dumps; 8 writer tasks is how the sink is
-        # meant to scale (one temp file + manifest entry per task)
-        stream.repartition(8)
-        .writeStream.format("jsonl_dir")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{out_dir}/_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # widen the Python writer: without this the write stage inherits the
+    # scan's 2 tasks (one per staged file), serializing the row-at-a-time
+    # json.dumps; 8 writer tasks is how the sink is meant to scale (one
+    # temp file + manifest entry per task)
+    run_available_now(stream.repartition(8), ("jsonl_dir", out_dir))
     back = read_jsonl_sink(spark, out_dir, schema="event_type STRING, value DOUBLE")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1169,11 +1165,9 @@ def s26_stream_lsh_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets_i = idx_sigs.select(
         F.col("doc_id").alias("dup_of"), F.col("shingle_set").alias("set_i")
     )
-    staged = _staged_new_docs(spark, sf_dir)
-    out_dir = memo.scratch_dir("s26_out")
-    stream = _staged_replay_stream(spark, staged)
+    stream = _staged_replay_stream(spark, _staged_new_docs(spark, sf_dir))
 
-    def probe(batch_df, epoch_id):
+    def probe(batch_df):
         batch = batch_df.localCheckpoint(eager=True)
         # checkpointed: probed three times below (size gate, banding,
         # verify sets) -- recomputing the minhash per use triples the
@@ -1233,38 +1227,14 @@ def s26_stream_lsh_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("jaccard") >= 0.8)
         )
         w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard"), F.asc("dup_of"))
-        best = (
+        yield (
             verified.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("doc_id", "dup_of", "jaccard")
-            # foreachBatch is at-least-once: a retried micro-batch whose
-            # append already committed would re-append the same rows.
-            # Tag with the (stable-on-retry) epoch id so the read-back
-            # can collapse retries, mirroring s28's idempotent merge.
-            .withColumn("epoch", F.lit(int(epoch_id)))
         )
-        best.write.mode("append").parquet(out_dir)
         cands.unpersist()  # per-batch cache released with the batch
 
-    # 8 shuffle partitions for the per-batch probe joins: each micro-batch
-    # handles ~1/2 of the odd docs, so 32-wide exchanges are pure task
-    # overhead (2 batches x several joins); at scale this is per-batch
-    # sizing, which never changes the per-doc best match.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{out_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    raw = _sink_readback(
-        spark, out_dir, "doc_id BIGINT, dup_of BIGINT, jaccard DOUBLE, epoch INT"
-    )
+    raw = _append_epochs(stream, probe, "doc_id BIGINT, dup_of BIGINT, jaccard DOUBLE")
     wr = Window.partitionBy("doc_id").orderBy(F.asc("epoch"), F.asc("dup_of"))
     return (
         raw.withColumn("rn", F.row_number().over(wr))
@@ -1326,7 +1296,12 @@ def s27_stream_psi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "side", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _, state = run_to_memory_sink(cells_stream, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    state = run_available_now(
+        cells_stream,
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
     cells = (
         state.groupBy("event_type", "bucket")
         .agg(
@@ -1409,10 +1384,6 @@ SELECT cid, n_vectors,
 FROM counts
 """
 
-# last run's partials store, exposed so tests can pin the per-batch
-# O(#centroids) append contract (the incremental property itself)
-_S28_LAST_PARTS_DIR: str | None = None
-
 
 def _staged_embeddings(spark: SparkSession, sf_dir: str) -> str:
     """Full embeddings table split across 4 parquet files for replay."""
@@ -1457,11 +1428,9 @@ def s28_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the static quantizer: built once, broadcast to every batch
         .localCheckpoint(eager=True)
     )
-    staged = _staged_embeddings(spark, sf_dir)
-    parts_dir = memo.scratch_dir("s28_parts")
-    stream = _staged_replay_stream(spark, staged)
+    stream = _staged_replay_stream(spark, _staged_embeddings(spark, sf_dir))
 
-    def ingest(batch_df, epoch_id):
+    def ingest(batch_df):
         batch = batch_df.select(
             "vec_id", _as_double(F.col("embedding")).alias("v")
         ).withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
@@ -1474,32 +1443,10 @@ def s28_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("crn") == 1)
             .select("vec_id", "cid")
         )
-        (
-            assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(parts_dir)
-        )
+        yield assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).coalesce(1)
 
-    ckpt = memo.scratch_dir("s28_ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    global _S28_LAST_PARTS_DIR
-    _S28_LAST_PARTS_DIR = parts_dir
     counts = (
-        spark.read.parquet(parts_dir)
+        _append_epochs(stream, ingest, "cid BIGINT, n BIGINT")
         # idempotent merge: foreachBatch is at-least-once, so a batch
         # retried after its append committed leaves a duplicate
         # (cid, epoch) row-group; per-epoch counts are deterministic
@@ -1639,11 +1586,11 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
             f"(cap {_S29_MAX_LIST}); per-batch probes against it would be "
             "unbounded -- increase centroid count (lower stride) and re-cluster"
         )
-    staged = _staged_embeddings(spark, sf_dir)
-    out_dir = memo.scratch_dir("s29_out")
-    stream = _staged_replay_stream(spark, staged).filter(F.col("vec_id") % 2 == 1)
+    stream = _staged_replay_stream(spark, _staged_embeddings(spark, sf_dir)).filter(
+        F.col("vec_id") % 2 == 1
+    )
 
-    def probe(batch_df, epoch_id):
+    def probe(batch_df):
         batch = (
             batch_df.select("vec_id", _as_double(F.col("embedding")).alias("v"))
             .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
@@ -1675,7 +1622,7 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
         )
         maybe_bcast = F.broadcast if small else (lambda d: d)
         wb = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("dup_of"))
-        best = (
+        yield (
             idx.join(maybe_bcast(assigned), "cid")
             .withColumn(
                 "cos",
@@ -1687,28 +1634,9 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
             .withColumn("rn", F.row_number().over(wb))
             .filter(F.col("rn") == 1)
             .select("vec_id", "dup_of", F.round("cos", 6).alias("cos"))
-            .withColumn("epoch", F.lit(int(epoch_id)))
         )
-        best.write.mode("append").parquet(out_dir)
 
-    # per-batch shuffle sizing (see s26): each batch carries ~1/4 of the
-    # odd vectors, so narrow exchanges beat 32-way task overhead; the
-    # width never changes WHICH best match a vector gets.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{out_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    raw = _sink_readback(
-        spark, out_dir, "vec_id BIGINT, dup_of BIGINT, cos DOUBLE, epoch INT"
-    )
+    raw = _append_epochs(stream, probe, "vec_id BIGINT, dup_of BIGINT, cos DOUBLE")
     # retries re-append identical per-epoch rows (deterministic file
     # replay): collapse on (vec_id, epoch)-first ordering
     wr = Window.partitionBy("vec_id").orderBy(
@@ -1795,11 +1723,9 @@ def s30_stream_cdc_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the persistent chunk index: chunked ONCE, joined by every batch
         .localCheckpoint(eager=True)
     )
-    staged = _staged_new_docs(spark, sf_dir)
-    out_dir = memo.scratch_dir("s30_out")
-    stream = _staged_replay_stream(spark, staged)
+    stream = _staged_replay_stream(spark, _staged_new_docs(spark, sf_dir))
 
-    def probe(batch_df, epoch_id):
+    def probe(batch_df):
         from ..operators.dedup import PROBE_BROADCAST_SHINGLE_LIMIT
 
         # checkpointed: the rolling-hash chunking is the batch's dominant
@@ -1827,7 +1753,7 @@ def s30_stream_cdc_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("clen").cast("long").alias("dup_tokens"),
             )
         )
-        per_doc = (
+        yield (
             ch.groupBy("doc_id", "n")
             .agg(F.count(F.lit(1)).cast("long").alias("n_chunks"))
             .join(dup, "doc_id", "left")
@@ -1844,27 +1770,13 @@ def s30_stream_cdc_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                     4,
                 ).alias("dup_token_frac"),
             )
-            .withColumn("epoch", F.lit(int(epoch_id)))
         )
-        per_doc.write.mode("append").parquet(out_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{out_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    raw = _sink_readback(
-        spark,
-        out_dir,
+    raw = _append_epochs(
+        stream,
+        probe,
         "doc_id BIGINT, n_chunks BIGINT, n_dup_chunks BIGINT,"
-        " dup_tokens BIGINT, dup_token_frac DOUBLE, epoch INT",
+        " dup_tokens BIGINT, dup_token_frac DOUBLE",
     )
     # retries re-append identical per-epoch rows; collapse before ranking
     wr = Window.partitionBy("doc_id").orderBy(F.asc("epoch"))
@@ -1908,7 +1820,12 @@ def s31_stream_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily_stream = stream.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    _, state = run_to_memory_sink(daily_stream, "complete", shuffle_partitions=REPLAY_STATE_PARTITIONS)
+    state = run_available_now(
+        daily_stream,
+        "memory",
+        output_mode="complete",
+        shuffle_partitions=REPLAY_SHUFFLE_PARTITIONS,
+    )
     # |types| x |days| rows; materialize so the fold plans over a stable
     # snapshot of the memory-sink view (the s27 device)
     return ewma_anomaly_report(state.localCheckpoint(eager=True))
@@ -2016,11 +1933,9 @@ def s32_stream_contamination_probe(spark: SparkSession, sf_dir: str) -> DataFram
         # the eval-set fingerprint: built once, broadcast to every batch
         .localCheckpoint(eager=True)
     )
-    staged = _staged_corpus_docs(spark, sf_dir)
-    out_dir = memo.scratch_dir("s32_out")
-    stream = _staged_replay_stream(spark, staged)
+    stream = _staged_replay_stream(spark, _staged_corpus_docs(spark, sf_dir))
 
-    def probe(batch_df, epoch_id):
+    def probe(batch_df):
         batch = batch_df.localCheckpoint(eager=True)
         hashed = batch.select(
             "doc_id",
@@ -2033,33 +1948,13 @@ def s32_stream_contamination_probe(spark: SparkSession, sf_dir: str) -> DataFram
             .groupBy("doc_id")
             .agg(F.countDistinct("h").alias("n_hits"))
         )
-        per_doc = (
-            batch.select("doc_id", "source")
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                "source",
-                F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            )
-            .withColumn("epoch", F.lit(int(epoch_id)))
+        yield batch.select("doc_id", "source").join(hits, "doc_id", "left").select(
+            "doc_id",
+            "source",
+            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
         )
-        per_doc.write.mode("append").parquet(out_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{out_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    raw = _sink_readback(
-        spark, out_dir, "doc_id BIGINT, source STRING, n_hits BIGINT, epoch INT"
-    )
+    raw = _append_epochs(stream, probe, "doc_id BIGINT, source STRING, n_hits BIGINT")
     wr = Window.partitionBy("doc_id").orderBy(F.asc("epoch"))
     return (
         raw.withColumn("rn", F.row_number().over(wr))
@@ -2158,38 +2053,21 @@ def s33_stream_ngram_jaccard_probe(spark: SparkSession, sf_dir: str) -> DataFram
     sets_i, prefix_i, dfreq_i = ngram_prefix_index(
         docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", threshold=0.5
     )
-    staged = _staged_new_docs(spark, sf_dir)
-    out_dir = memo.scratch_dir("s33_out")
-    stream = _staged_replay_stream(spark, staged)
+    stream = _staged_replay_stream(spark, _staged_new_docs(spark, sf_dir))
 
-    def probe(batch_df, epoch_id):
+    def probe(batch_df):
         batch = batch_df.localCheckpoint(eager=True)
-        raw_matches, pair_cache = ngram_probe_index(
+        matches, pair_cache = ngram_probe_index(
             sets_i, prefix_i, dfreq_i, batch, "doc_id", "text", threshold=0.5,
             with_cache=True,
         )
-        matches = raw_matches.withColumn("epoch", F.lit(int(epoch_id)))
-        matches.write.mode("append").parquet(out_dir)
+        yield matches
         # the pair-list cache served its batch; release it now instead of
         # waiting on the ContextCleaner (a long-running stream would
         # otherwise hold one cached pair list per un-GC'd batch)
         pair_cache.unpersist()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", f"{out_dir}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    raw = _sink_readback(
-        spark, out_dir, "doc_id BIGINT, dup_of BIGINT, jaccard DOUBLE, epoch INT"
-    )
+    raw = _append_epochs(stream, probe, "doc_id BIGINT, dup_of BIGINT, jaccard DOUBLE")
     wr = Window.partitionBy("doc_id", "dup_of").orderBy(F.asc("epoch"))
     return (
         raw.withColumn("rn", F.row_number().over(wr))

@@ -52,7 +52,8 @@ class RecommenderState:
 
 class CountsProvider:
     """Pull-through cache over a callable returning the current aggregate
-    rows (e.g. ``lambda: spark.table(mem_sink_name).collect()``)."""
+    rows (e.g. ``lambda: out.collect()`` over the memory-sink frame that
+    ``run_available_now`` returns)."""
 
     def __init__(self, fetch):
         self._fetch = fetch

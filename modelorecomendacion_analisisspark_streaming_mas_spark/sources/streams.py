@@ -14,10 +14,11 @@ stateful plans.
 
 from __future__ import annotations
 
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .readers import load_events
@@ -142,14 +143,21 @@ ROCKSDB_PROVIDER = (
 )
 
 
-# Default state parallelism for REPLAY-SIZED windowed aggregations (HDFS-
-# backed state store, keys = windows x types, thousands of cheap keys):
-# enough partitions to spread the window state without paying per-instance
-# open cost for instances that would each hold a handful of keys. Query
-# code references this knob, never a literal, so the sizing policy has one
-# home; per-key Python-handler operators derive from key cardinality
+# Shuffle width for REPLAY-SIZED streams, passed to run_available_now by
+# every entry that pins one (query code references this knob, never a
+# literal, so the sizing policy has one home). Two roles, one size:
+# * state-store parallelism of windowed/grouped aggregations (HDFS-backed
+#   store, keys = windows x types, thousands of cheap keys): enough
+#   partitions to spread the state without paying per-instance open cost
+#   for instances that would each hold a handful of keys;
+# * exchange width of the foreachBatch probes' per-batch joins: each
+#   micro-batch carries a fraction of the replay (1/2 of the new docs in
+#   s26), so session-wide exchanges are pure task overhead (micro-batches
+#   x several joins). At scale this is per-batch sizing, and it never
+#   changes which best match a document gets.
+# Per-key Python-handler operators derive theirs from key cardinality
 # instead (derive_state_partitions).
-REPLAY_STATE_PARTITIONS = 8
+REPLAY_SHUFFLE_PARTITIONS = 8
 
 
 # Keys per partition needed to amortize one RocksDB instance's per-micro-
@@ -187,56 +195,83 @@ def derive_state_partitions(
     return max(1, min(int(n_keys), default, amortized))
 
 
-def run_to_memory_sink(
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+
+def run_available_now(
     df: DataFrame,
-    output_mode: str,
-    query_name: str | None = None,
+    sink: str | tuple[str, str] | Callable[[DataFrame, int], None],
+    *,
+    output_mode: str = "append",
     shuffle_partitions: int | None = None,
     rocksdb_state: bool = False,
-) -> tuple[str, "DataFrame"]:
-    """S8: run a streaming plan to completion (availableNow) into a named
-    in-memory table (the reference's serving surface, app/spark_stream.py:
-    31-36) and return (name, result DataFrame). Unique name per call so
-    concurrent/repeated driver invocations never collide.
+) -> DataFrame | None:
+    """Run a streaming plan to completion with the availableNow trigger:
+    the engine's one run-once entry point (Structured Streaming's periodic-
+    job mode). Returns the result frame for the memory sink, else None.
+
+    ``sink`` is ``"memory"`` (S8: the reference's serving surface,
+    app/spark_stream.py:31-36), a ``(format, path)`` pair for a file or
+    Python-data-source sink (``("parquet", d)``, ``("jsonl_dir", d)``), or
+    a foreachBatch function ``f(batch_df, epoch_id)``.
+
+    The checkpoint is a fresh ``memo.scratch_dir`` removed when the run
+    ends. A memory-sink run registers its table under a unique ``mem_``
+    name (repeated or concurrent calls never collide), binds the result
+    frame to it, then drops the view: the frame keeps the sink's rows,
+    and the session keeps no view.
 
     ``shuffle_partitions`` sizes the STATE STORE parallelism, pinned at
     query start for the checkpoint's lifetime: a stream-stream join opens
     4 state-store instances per shuffle partition, so this must track
     expected state volume, not batch defaults (4-5x on replay-sized state;
-    on a real cluster size it to executors x cores). Set-and-restore is
-    safe because availableNow + awaitTermination is synchronous.
-
+    on a real cluster size it to executors x cores). For foreachBatch it is
+    also the width of every exchange inside the per-batch function.
     ``rocksdb_state`` switches the state store to the RocksDB provider
     (off-heap, spills to local disk) -- the 100 TB configuration when
     per-key state exceeds executor heap (e.g. billions of dedup keys).
     Results are provider-independent, pinned by
-    tests/test_streaming_recovery.py::test_rocksdb_state_store_parity."""
+    tests/test_streaming_recovery.py::test_rocksdb_state_store_parity.
+    Both confs are set for the run and restored after it, which is safe
+    because availableNow + awaitTermination is synchronous.
+
+    availableNow still ends with a no-data micro-batch once the watermark
+    has moved; append-mode windows (s13) rely on it to close."""
+    from ..plans import memo  # plans/ imports this module at load time
+
     spark = df.sparkSession
-    name = query_name or f"mem_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
+    pins = {}
     if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        pins["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if rocksdb_state:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+        pins[_PROVIDER_CONF] = ROCKSDB_PROVIDER
+    prev = {k: spark.conf.get(k, None) for k in pins}
+    ckpt = memo.scratch_dir("ckpt")
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    name = None
+    if sink == "memory":
+        name = f"mem_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(name)
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        fmt, path = sink
+        writer = writer.format(fmt).option("path", path)
+    for k, v in pins.items():
+        spark.conf.set(k, v)
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer.start().awaitTermination()
+        return spark.table(name) if name else None
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if rocksdb_state:
-            if prev_provider is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
             else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev_provider
-                )
-    return name, spark.table(name)
+                spark.conf.set(k, v)
+        if name:
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)

@@ -23,7 +23,7 @@ stateful.py uses.
 
 Scale notes: state is one (long, double) tuple per key in the state store;
 parallelism = shuffle partitions at query start (pinned in the checkpoint,
-see run_to_memory_sink). TTL (ttlDurationMs) and timers are available on
+see sources/streams.py::run_available_now). TTL (ttlDurationMs) and timers are available on
 the same handle for eviction at 100 TB key cardinality -- not used here
 because the oracle needs full retention.
 """

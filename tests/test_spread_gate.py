@@ -19,11 +19,9 @@ from modelorecomendacion_analisisspark_streaming_mas_spark.sources.readers impor
     spread,
 )
 
-SF_DIR_01 = "/root/testdata/sf0.001"
 
-
-def test_plan_size_bytes_is_driver_side_and_sane(spark):
-    docs = load_table(spark, SF_DIR_01, "documents")
+def test_plan_size_bytes_is_driver_side_and_sane(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
     est = _plan_size_bytes(docs)
     assert est is not None and est > 0
     # projection prunes the estimate (Catalyst scales by column sizes)
@@ -32,8 +30,8 @@ def test_plan_size_bytes_is_driver_side_and_sane(spark):
     assert est_sel is not None and 0 < est_sel <= est
 
 
-def test_min_bytes_skips_replay_sized_frames(spark):
-    docs = load_table(spark, SF_DIR_01, "documents").select("doc_id", "text")
+def test_min_bytes_skips_replay_sized_frames(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base_parts = docs.rdd.getNumPartitions()
     gated = spread(docs, cap=8, min_bytes=PY_CHAIN_SPREAD_MIN_BYTES)
     # replay fixture is far below the floor: no repartition node added
@@ -41,8 +39,8 @@ def test_min_bytes_skips_replay_sized_frames(spark):
     assert gated is docs
 
 
-def test_min_bytes_zero_preserves_old_widening(spark):
-    docs = load_table(spark, SF_DIR_01, "documents").select("doc_id", "text")
+def test_min_bytes_zero_preserves_old_widening(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     target = min(8, spark.sparkContext.defaultParallelism)
     # the fixture is one small parquet file: below the target, so the
     # ungated spread must widen it to exactly the capped parallelism
@@ -51,8 +49,8 @@ def test_min_bytes_zero_preserves_old_widening(spark):
     assert widened.rdd.getNumPartitions() == target
 
 
-def test_gate_never_changes_results(spark):
-    docs = load_table(spark, SF_DIR_01, "documents").select("doc_id", "text")
+def test_gate_never_changes_results(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     a = spread(docs, cap=8, min_bytes=PY_CHAIN_SPREAD_MIN_BYTES)
     b = spread(docs, cap=8, min_bytes=0)
     rows_a = sorted(r["doc_id"] for r in a.select("doc_id").collect())
@@ -60,12 +58,12 @@ def test_gate_never_changes_results(spark):
     assert rows_a == rows_b
 
 
-def test_synth_table_identical_under_forced_spread(spark):
+def test_synth_table_identical_under_forced_spread(spark, sf_dir):
     """The mm-family synth output is partitioning-invariant: forcing the
     old unconditional spread produces byte-identical media rows."""
     import modelorecomendacion_analisisspark_streaming_mas_spark.functions.multimodal as mm
 
-    docs = load_table(spark, SF_DIR_01, "documents").select("doc_id", "text").limit(50)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
     gated = mm.synth_png_table(spark, docs, "doc_id", "text").select(
         "id", F.md5(F.base64("content")).alias("h")
     )

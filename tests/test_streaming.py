@@ -17,7 +17,7 @@ from modelorecomendacion_analisisspark_streaming_mas_spark.sources.generators im
 )
 from modelorecomendacion_analisisspark_streaming_mas_spark.sources.streams import (
     file_stream,
-    run_to_memory_sink,
+    run_available_now,
     stage_events_for_replay,
 )
 from modelorecomendacion_analisisspark_streaming_mas_spark.streaming.metrics import (
@@ -45,7 +45,7 @@ def test_feedback_stream_age_bins(spark):
     events = write_feedback_jsonl(d, n=300, files=3, seed=7)
     stream = spark.readStream.format("text").load(d).withColumnRenamed("value", "value")
     binned = feedback_age_bins(stream, "value").groupBy("gender", "age_bin").count()
-    _, out = run_to_memory_sink(binned, "complete")
+    out = run_available_now(binned, "memory", output_mode="complete")
     got = {(r["gender"], r["age_bin"]): r["count"] for r in out.collect()}
 
     expected: dict[tuple[str, str], int] = {}
@@ -66,7 +66,7 @@ def test_trigger_metrics_listener(spark, sf_dir):
         spark.read.parquet(d).repartition(4).write.mode("overwrite").parquet(multi)
         stream = file_stream(spark, multi, schema, max_files_per_trigger=1)
         counts = stream.groupBy("event_type").count()
-        _, out = run_to_memory_sink(counts, "complete")
+        out = run_available_now(counts, "memory", output_mode="complete")
         assert out.count() > 0
         # listener events arrive on the JVM callback thread -- wait briefly
         deadline = time.time() + 10
@@ -179,7 +179,7 @@ def test_watermark_late_data_contract_append_mode(spark):
 
     from modelorecomendacion_analisisspark_streaming_mas_spark.sources.streams import (
         file_stream,
-        run_to_memory_sink,
+        run_available_now,
     )
 
     d = tempfile.mkdtemp(prefix="mras_wm_")
@@ -213,7 +213,7 @@ def test_watermark_late_data_contract_append_mode(spark):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.date_format("win.start", "HH:mm").alias("start"), "n")
     )
-    _, out = run_to_memory_sink(agg, "append")
+    out = run_available_now(agg, "memory")
     got = {r["start"]: r["n"] for r in out.collect()}
     # [10:00,10:30): the two on-time rows only -- batch 3's 10:07 dropped
     # (state evicted). [10:30,11:00): the 10:55 row. [11:00,11:30): never
@@ -251,7 +251,7 @@ def test_longest_run_custom_state(spark):
     spark.createDataFrame(part2, cols).coalesce(1).write.mode("append").parquet(d)
 
     stream = file_stream(spark, d, df1.schema, max_files_per_trigger=1)
-    _, out = run_to_memory_sink(longest_run_per_user(stream), "update")
+    out = run_available_now(longest_run_per_user(stream), "memory", output_mode="update")
     final = (
         out.groupBy("user_id")
         .agg(
@@ -290,9 +290,10 @@ def test_transform_with_state_running_counts(spark):
     df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
     df.coalesce(1).write.mode("overwrite").parquet(d)
     stream = file_stream(spark, d, df.schema)
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         running_count_sum_per_type(stream.select("event_type", "value")),
-        "update",
+        "memory",
+        output_mode="update",
         rocksdb_state=True,
     )
     final = {
@@ -344,8 +345,11 @@ def test_transform_with_state_latest_k_liststate(spark):
     spark.createDataFrame(part2, cols).coalesce(1).write.mode("append").parquet(d)
 
     stream = file_stream(spark, d, df1.schema, max_files_per_trigger=1)
-    _, out = run_to_memory_sink(
-        latest_k_per_type(stream, k=2), "update", rocksdb_state=True
+    out = run_available_now(
+        latest_k_per_type(stream, k=2),
+        "memory",
+        output_mode="update",
+        rocksdb_state=True,
     )
 
     assert out.agg(F.max("slot")).first()[0] <= 2  # state bounded at k
@@ -469,8 +473,11 @@ def test_transform_with_state_ttl_expires_across_restart(spark):
     spark.createDataFrame(part2, cols).coalesce(1).write.mode("append").parquet(d)
 
     stream = file_stream(spark, d, df1.schema, max_files_per_trigger=1)
-    _, out = run_to_memory_sink(
-        bucket_counts_per_type(stream, n_buckets=10), "update", rocksdb_state=True
+    out = run_available_now(
+        bucket_counts_per_type(stream, n_buckets=10),
+        "memory",
+        output_mode="update",
+        rocksdb_state=True,
     )
 
     from pyspark.sql import Window
@@ -511,7 +518,7 @@ def test_longest_run_detects_out_of_order_across_batches(spark):
     spark.createDataFrame(part2, cols).coalesce(1).write.mode("append").parquet(d)
 
     stream = file_stream(spark, d, df1.schema, max_files_per_trigger=1)
-    _, out = run_to_memory_sink(longest_run_per_user(stream), "update")
+    out = run_available_now(longest_run_per_user(stream), "memory", output_mode="update")
     ooo = out.groupBy("user_id").agg(F.max("ooo_events").alias("ooo")).collect()
     by_user = {r["user_id"]: r["ooo"] for r in ooo}
     # Either the file source staged both files in one batch (sorted -> no
@@ -665,9 +672,10 @@ def test_stream_funnel_recomputes_exactly_under_out_of_order_arrival(spark):
     spark.createDataFrame(part2, cols).coalesce(1).write.mode("append").parquet(d)
 
     stream = file_stream(spark, d, df1.schema, max_files_per_trigger=1)
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         funnel_stage_per_user(stream, window_min=60),
-        "update",
+        "memory",
+        output_mode="update",
         shuffle_partitions=4,
         rocksdb_state=True,
     )
@@ -713,9 +721,9 @@ def test_transform_with_state_timer_sessionization(spark):
     d = tempfile.mkdtemp(prefix="mras_timer_")
     df.coalesce(1).write.mode("overwrite").parquet(d)
     stream = file_stream(spark, d, df.schema)
-    _, out = run_to_memory_sink(
+    out = run_available_now(
         timer_sessionize_per_user(stream, gap_min=45),
-        "append",
+        "memory",
         shuffle_partitions=4,
         rocksdb_state=True,
     )
@@ -771,7 +779,7 @@ def test_incremental_merge_leaves_untouched_partitions_on_disk(spark, tmp_path):
     assert got == {1: 10.0, 2: 25.0, 3: 30.0}
 
 
-def test_s28_ingest_partials_are_centroid_bounded(spark, sf_dir):
+def test_s28_ingest_partials_are_centroid_bounded(spark, sf_dir, monkeypatch):
     """The incremental property behind s28: each micro-batch appends
     O(#centroids) partial rows (4 epochs here), never a per-vector
     table -- and the published counts cover every vector exactly once."""
@@ -784,6 +792,15 @@ def test_s28_ingest_partials_are_centroid_bounded(spark, sf_dir):
         streamq,
     )
 
+    appended = []
+    real = streamq._append_epochs
+
+    def capture(*args, **kwargs):
+        raw = real(*args, **kwargs)
+        appended.append(raw)
+        return raw
+
+    monkeypatch.setattr(streamq, "_append_epochs", capture)
     out = REGISTRY["s28_stream_ivf_ingest"].fn(spark, sf_dir).collect()
     n_emb = load_table(spark, sf_dir, "embeddings").count()
     n_cent = (
@@ -794,9 +811,10 @@ def test_s28_ingest_partials_are_centroid_bounded(spark, sf_dir):
     assert sum(r["n_vectors"] for r in out) == n_emb
     assert len(out) <= n_cent
     assert abs(sum(r["frac"] for r in out) - 1.0) < 1e-4
-    # the INCREMENTAL property itself: inspect the partials store -- one
-    # O(#centroids) row-group per epoch, never a per-vector table
-    parts = spark.read.parquet(streamq._S28_LAST_PARTS_DIR).collect()
+    # the INCREMENTAL property itself: inspect the appended partials --
+    # one O(#centroids) row-group per epoch, never a per-vector table
+    (raw,) = appended
+    parts = raw.collect()
     by_epoch: dict = {}
     for r in parts:
         by_epoch.setdefault(r["epoch"], 0)
@@ -1023,6 +1041,33 @@ def test_probe_stream_with_no_new_docs_degrades_to_empty(
     assert out.count() == 0
 
 
+def test_available_now_runs_leave_no_views_or_checkpoints(spark, duck, sf_dir):
+    """Every availableNow run cleans up after itself: the memory-sink
+    entry (s01) leaves no mem_ temp view in the session, and no entry --
+    memory sink (s01), parquet file sink (s13) or foreachBatch probe
+    (s26) -- leaves a checkpoint dir under the memo scratch root. The
+    frames they returned stay readable afterwards and equal the oracle."""
+    from modelorecomendacion_analisisspark_streaming_mas_spark.plans import (
+        REGISTRY,
+        memo,
+    )
+
+    from .conftest import assert_frames_match
+
+    names = [
+        "s01_stream_tumbling_counts",
+        "s13_stream_file_sink",
+        "s26_stream_lsh_dedup_probe",
+    ]
+    frames = {n: REGISTRY[n].fn(spark, sf_dir) for n in names}
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")]
+    assert not views, views
+    ckpts = [d for d, subdirs, _ in os.walk(memo._ROOT) if "offsets" in subdirs]
+    assert not ckpts, ckpts
+    for n, df in frames.items():
+        assert_frames_match(df.toPandas(), duck.execute(REGISTRY[n].oracle).df(), n)
+
+
 def test_exact_cents_sum_fail_loud_off_grid():
     """r13 ADVICE (medium): pandas astype('int64') silently WRAPS finite
     off-scale doubles (1e300 -> a garbage negative), so the TWS cents
@@ -1109,7 +1154,7 @@ def test_derive_state_partitions_tracks_keys(spark):
     )
 
     # and the policy holds in the code: no literal shuffle_partitions= pins
-    # left in any plans/ query module
+    # and no hand-set session shuffle width left in any plans/ query module
     import glob
     import os
     import re
@@ -1123,6 +1168,10 @@ def test_derive_state_partitions_tracks_keys(spark):
     for path in glob.glob(os.path.join(plans_dir, "*.py")):
         with open(path) as f:
             src = f.read()
-        for m in re.finditer(r"shuffle_partitions=\d+", src):
+        for m in re.finditer(
+            r"shuffle_partitions=\d+"
+            r"|spark\.conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions[\"']",
+            src,
+        ):
             offenders.append(f"{os.path.basename(path)}: {m.group(0)}")
     assert not offenders, offenders

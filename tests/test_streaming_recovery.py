@@ -112,7 +112,7 @@ def test_rocksdb_state_store_parity(spark):
     import tempfile as tf
 
     from modelorecomendacion_analisisspark_streaming_mas_spark.sources.streams import (
-        run_to_memory_sink,
+        run_available_now,
     )
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -128,7 +128,7 @@ def test_rocksdb_state_store_parity(spark):
     def counts(rocksdb: bool):
         stream = file_stream(spark, d, schema)
         agg = streaming_group_counts(stream, "event_type")
-        _, out = run_to_memory_sink(agg, "update", rocksdb_state=rocksdb)
+        out = run_available_now(agg, "memory", output_mode="update", rocksdb_state=rocksdb)
         return {
             r["event_type"]: (r["n"],)
             for r in out.groupBy("event_type")
