@@ -23,9 +23,10 @@ merging unrelated user/movie vertices. Vertex ids here are prefixed
 ('c<custkey>' / 'p<partkey>') so the bipartite sets stay disjoint.
 
 Scale: each PR iteration is one shuffle (join on src + groupBy dst);
-lineage is truncated with localCheckpoint every few iterations (reliable
-checkpoint on a cluster). CC's shortcut join doubles reach per step ->
-O(log(diameter)) rounds.
+lineage is truncated with localCheckpoint every PAGERANK_CHECKPOINT_EVERY
+iterations (reliable checkpoint on a cluster), and every PageRank mode
+runs the one kernel ``_power_iterate``. CC's shortcut join doubles reach
+per step -> O(log(diameter)) rounds.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import unpersist
 
 def bipartite_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """G1: vertices (customers+parts, tagged) and distinct directed edges
@@ -70,28 +72,7 @@ def bipartite_graph_encoded(
     overhead); iterative algorithms must keep the default so every
     round reuses the materialized frames instead of re-running the
     fact join."""
-    from ..sources.readers import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # bounded limit+1 probe, not a full count: decides the broadcast the
-    # counted way instead of force-broadcasting a fact table
-    orders_small = orders.limit(BROADCAST_VERTEX_LIMIT + 1).count() <= BROADCAST_VERTEX_LIMIT
-    edges = (
-        li.join(_maybe_broadcast(orders, orders_small), li.l_orderkey == orders.o_orderkey)
-        # a vertex must HAVE an id: a NULL custkey/partkey would mint a
-        # NULL vertex that no equi-join in any iterative algorithm can
-        # ever match (CC never merges it, BFS never reaches it), so the
-        # engines drift apart one phantom component at a time (r14
-        # nullkeys find). Edges with an unidentifiable endpoint are
-        # dropped at build, mirrored in plans/graphq._EDGES_SQL.
-        .filter(F.col("o_custkey").isNotNull() & F.col("l_partkey").isNotNull())
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_partkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_pairs(spark, sf_dir).distinct()
     if materialize:
         # materialize once: vertices derive from edges twice, and every
         # algorithm iteration would otherwise re-run the fact join+distinct
@@ -104,6 +85,43 @@ def bipartite_graph_encoded(
     if materialize:
         vertices = vertices.localCheckpoint(eager=True)
     return vertices, edges
+
+
+def weighted_bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Encoded (src, dst, weight) with weight = purchase multiplicity: the
+    weighted twin of ``bipartite_graph_encoded``'s edges (groupBy count
+    instead of distinct -- the same single fact-join shuffle)."""
+    return (
+        _purchase_pairs(spark, sf_dir)
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("weight"))
+    )
+
+
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One encoded (src, dst) row per line item: customer -> part."""
+    from ..sources.readers import load_table
+
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    # bounded limit+1 probe, not a full count: decides the broadcast the
+    # counted way instead of force-broadcasting a fact table
+    orders_small = orders.limit(BROADCAST_VERTEX_LIMIT + 1).count() <= BROADCAST_VERTEX_LIMIT
+    return (
+        li.join(_maybe_broadcast(orders, orders_small), li.l_orderkey == orders.o_orderkey)
+        # a vertex must HAVE an id: a NULL custkey/partkey would mint a
+        # NULL vertex that no equi-join in any iterative algorithm can
+        # ever match (CC never merges it, BFS never reaches it), so the
+        # engines drift apart one phantom component at a time (r14
+        # nullkeys find). Edges with an unidentifiable endpoint are
+        # dropped at build, mirrored in plans/graphq._EDGES_SQL and
+        # _W_EDGES_SQL.
+        .filter(F.col("o_custkey").isNotNull() & F.col("l_partkey").isNotNull())
+        .select(
+            (F.col("o_custkey") * 2).alias("src"),
+            (F.col("l_partkey") * 2 + 1).alias("dst"),
+        )
+    )
 
 
 def decode_vertex_id(nid) -> F.Column:
@@ -142,55 +160,132 @@ def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(df) if small else df
 
 
+# Rounds between rank checkpoints in the fixed-round PageRank modes (the
+# ``tol`` mode checkpoints every round: its delta probe materializes each
+# round anyway). Each round's broadcast build re-executes the rank plan
+# back to the last checkpoint, so a deep cadence re-runs whole rounds,
+# while a checkpoint every round pays one materialization job per round.
+# 2 over 3, A/B on this kernel at sf0.1, local[4]: warm kernel-only, 6
+# ABBA pairs in one process, g02 6.87 vs 7.10 s median (2 faster in 6/6),
+# g06 6.99 vs 6.86 s (3/6); cold whole entry, one process per run, 4
+# alternating rounds, g06 21.6 vs 23.0 s (4/4), g02 23.2 vs 22.5 s (1/4).
+# Neither cadence wins in both settings, so 2 stays: it checkpoints g06
+# on rounds 2, 4, ..., 10 as before, and cadence 3 had cost g06 43% in
+# the r16 driver bench (5.94 -> 8.50 s).
+PAGERANK_CHECKPOINT_EVERY = 2
+
+
+def _indicator(source_id) -> F.Column:
+    """The personalized teleport column: 1.0 on the source, 0.0 elsewhere."""
+    return F.when(F.col("id") == F.lit(source_id), F.lit(1.0)).otherwise(F.lit(0.0))
+
+
+def _power_iterate(
+    vertices: DataFrame,
+    edges: DataFrame,
+    teleports: list[F.Column],
+    reset_prob: float,
+    max_iter: int,
+    weight_col: str | None = None,
+    tol: float | None = None,
+) -> tuple[DataFrame, int]:
+    """The power iteration behind every PageRank mode, one rank column
+    ``r<j>`` per teleport column ``t_j``:
+
+        rank_0 = t_j
+        rank_n+1(v) = reset_prob * t_j(v)
+                      + (1 - reset_prob) * sum_{u->v} rank_n(u) * share(u->v)
+
+    ``share`` is 1/outDegree(u), or w(u,v)/sum_x w(u,x) with
+    ``weight_col``. Dangling mass is dropped (GraphX semantics). Runs
+    ``max_iter`` rounds, or with ``tol`` stops early once the largest
+    per-vertex change falls below it. Returns (id, r0..r<k-1>) and the
+    rounds run.
+
+    Scale shape: the edge+normalizer frame is checkpointed once; below
+    BROADCAST_VERTEX_LIMIT every round broadcasts the rank frame, so the
+    edge table never shuffles -- each round is a map-side broadcast join
+    + partial agg whose shuffle carries ~|V| partial sums, not |E| rows.
+
+    Storage: the returned frame is the last round's checkpoint. Every
+    superseded rank checkpoint is released once the next is
+    materialized, and the edge frame before returning, so a call leaves
+    exactly one persisted RDD behind: the result."""
+    damp = 1.0 - reset_prob
+    small = vertices.count() < BROADCAST_VERTEX_LIMIT  # cheap: checkpointed
+    cols = [f"r{j}" for j in range(len(teleports))]
+    if weight_col is None:
+        norm, w = F.count(F.lit(1)), []
+    else:
+        norm, w = F.sum(weight_col), [F.col(weight_col).alias("w")]
+    norms = edges.groupBy(F.col("src").alias("id")).agg(norm.alias("norm"))
+    e = (
+        edges.join(_maybe_broadcast(norms, small), edges.src == F.col("id"))
+        .select("src", "dst", *w, "norm")
+        .localCheckpoint(eager=True)
+    )
+
+    def share(r: str) -> F.Column:
+        # the oracles' operand order: they round to 6 digits, and a
+        # pre-divided w/wsum can differ from rank*w/wsum in the last ulp
+        if weight_col is None:
+            return F.col(r) / F.col("norm")
+        return F.col(r) * F.col("w") / F.col("norm")
+
+    ranks = vertices.select("id", *[t.alias(r) for t, r in zip(teleports, cols)])
+    held = None  # the newest rank checkpoint
+    if tol is not None:
+        ranks = held = ranks.localCheckpoint(eager=True)  # the first probe's baseline
+    it = 0
+    for it in range(1, max_iter + 1):
+        contribs = (
+            e.join(_maybe_broadcast(ranks, small), e.src == ranks.id)
+            .select("dst", *[share(r).alias(r) for r in cols])
+            .groupBy("dst")
+            .agg(*[F.sum(r).alias(r) for r in cols])
+        )
+        nxt = vertices.join(
+            _maybe_broadcast(contribs, small), vertices.id == contribs.dst, "left"
+        ).select(
+            "id",
+            *[
+                (
+                    F.lit(reset_prob) * t
+                    + F.lit(damp) * F.coalesce(F.col(r), F.lit(0.0))
+                ).alias(r)
+                for t, r in zip(teleports, cols)
+            ],
+        )
+        converged = False
+        if tol is not None or it % PAGERANK_CHECKPOINT_EVERY == 0 or it == max_iter:
+            nxt = nxt.localCheckpoint(eager=True)
+            if tol is not None:
+                deltas = (
+                    nxt.join(ranks.select("id", *[F.col(r).alias(f"p{r}") for r in cols]), "id")
+                    .agg(*[F.max(F.abs(F.col(r) - F.col(f"p{r}"))) for r in cols])
+                    .collect()[0]
+                )
+                converged = None not in deltas and max(deltas) < tol
+            if held is not None:
+                unpersist(held)
+            held = nxt
+        ranks = nxt
+        if converged:
+            break
+    unpersist(e)
+    return ranks, it
+
+
 def pagerank(
     vertices: DataFrame,
     edges: DataFrame,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """G3: GraphFrames-semantics PageRank (resetProbability=0.15,
-    maxIter=10 -- Explorativa3.ipynb:372-376). Returns (id, pagerank).
-
-    checkpoint_every=3 measured best at sf0.1 (r16 sweep over cadences
-    1/2/3/5/10: 4.5/3.6/3.4/3.5/4.1 s warm for 10 iterations -- each
-    broadcast build re-executes the plan back to the last checkpoint, so
-    deep cadences re-run whole iterations, while every-iteration
-    checkpointing pays one extra materialization job per round).
-
-    When the vertex set is small (< BROADCAST_VERTEX_LIMIT) every
-    iteration broadcasts the rank frame: the edge table then never
-    shuffles -- each round is a map-side broadcast join + partial-agg
-    whose shuffle carries only ~|V| partially-summed contributions,
-    not |E| rows."""
-    damp = 1.0 - reset_prob
-    small = vertices.count() < BROADCAST_VERTEX_LIMIT  # cheap: checkpointed
-    # loop-invariant edge+degree frame, materialized once
-    e = (
-        edges.join(_maybe_broadcast(out_degrees(edges), small), edges.src == F.col("id"))
-        .select("src", "dst", "outDegree")
-        .localCheckpoint(eager=True)
-    )
-    ranks = vertices.select("id", F.lit(1.0).alias("rank"))
-    for i in range(max_iter):
-        contribs = (
-            e.join(_maybe_broadcast(ranks, small), e.src == ranks.id)
-            .select("dst", (F.col("rank") / F.col("outDegree")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            vertices.join(_maybe_broadcast(contribs, small), vertices.id == contribs.dst, "left")
-            .select(
-                "id",
-                (F.lit(reset_prob) + F.lit(damp) * F.coalesce(F.col("contrib"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", F.col("rank").alias("pagerank"))
+    maxIter=10 -- Explorativa3.ipynb:372-376). Returns (id, pagerank)."""
+    ranks, _ = _power_iterate(vertices, edges, [F.lit(1.0)], reset_prob, max_iter)
+    return ranks.select("id", F.col("r0").alias("pagerank"))
 
 
 def pagerank_weighted(
@@ -199,56 +294,17 @@ def pagerank_weighted(
     weight_col: str = "weight",
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Weighted PageRank: contribution of u to v is rank(u) * w(u,v) /
     sum_x w(u,x) -- the natural generalization the reference's graph
     invites but GraphFrames ignores (its edges carry rating weights,
     GraphFrames_prueba/Explorativa3.ipynb:94-102, yet pageRank treats
     them as unweighted). With all weights equal this reduces exactly to
-    ``pagerank``. Same scale shape: loop-invariant edge+weight-sum frame
-    checkpointed once, rank frame broadcast per round below
-    BROADCAST_VERTEX_LIMIT so the edge table never reshuffles.
-
-    checkpoint_every=2, NOT the plain variant's 3: each broadcast build
-    re-executes the rank plan back to the last checkpoint, and the
-    weighted per-iteration tail is heavier (the weight-normalization
-    join rides every re-execution), so the r16 cadence sweep run on
-    PLAIN pagerank did not transfer -- the driver's r16 bench showed
-    cadence 3 costing g06 43% (5.94 -> 8.50 s) while g02 stayed flat."""
-    damp = 1.0 - reset_prob
-    small = vertices.count() < BROADCAST_VERTEX_LIMIT
-    wsums = edges.groupBy(F.col("src").alias("id")).agg(
-        F.sum(weight_col).alias("wsum")
+    ``pagerank``."""
+    ranks, _ = _power_iterate(
+        vertices, edges, [F.lit(1.0)], reset_prob, max_iter, weight_col=weight_col
     )
-    e = (
-        edges.join(_maybe_broadcast(wsums, small), edges.src == F.col("id"))
-        .select("src", "dst", F.col(weight_col).alias("w"), "wsum")
-        .localCheckpoint(eager=True)
-    )
-    ranks = vertices.select("id", F.lit(1.0).alias("rank"))
-    for i in range(max_iter):
-        contribs = (
-            e.join(_maybe_broadcast(ranks, small), e.src == ranks.id)
-            .select("dst", (F.col("rank") * F.col("w") / F.col("wsum")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            vertices.join(
-                _maybe_broadcast(contribs, small), vertices.id == contribs.dst, "left"
-            )
-            .select(
-                "id",
-                (
-                    F.lit(reset_prob)
-                    + F.lit(damp) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", F.col("rank").alias("pagerank"))
+    return ranks.select("id", F.col("r0").alias("pagerank"))
 
 
 def pagerank_personalized(
@@ -257,49 +313,16 @@ def pagerank_personalized(
     source_id,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Personalized PageRank (the GraphFrames ``pageRank(sourceId=...)``
-    surface): identical update rule family to ``pagerank`` except the
-    reset mass teleports ONLY to the source vertex --
+    surface): the reset mass teleports ONLY to the source vertex --
     rank_{k+1}(v) = reset_prob * [v == source] + damp * sum contribs --
     and rank_0 is the source indicator, so every unit of rank is mass
-    that flowed out of the source. Dangling-vertex mass is dropped, like
-    the static twin (GraphX semantics, no redistribution). Same scale
-    shape as ``pagerank``: loop-invariant edge+degree frame checkpointed
-    once; below BROADCAST_VERTEX_LIMIT the per-round join broadcasts the
-    rank frame so the edge table never shuffles."""
-    damp = 1.0 - reset_prob
-    small = vertices.count() < BROADCAST_VERTEX_LIMIT
-    e = (
-        edges.join(_maybe_broadcast(out_degrees(edges), small), edges.src == F.col("id"))
-        .select("src", "dst", "outDegree")
-        .localCheckpoint(eager=True)
+    that flowed out of the source."""
+    ranks, _ = _power_iterate(
+        vertices, edges, [_indicator(source_id)], reset_prob, max_iter
     )
-    ind = F.when(F.col("id") == F.lit(source_id), F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = vertices.select("id", ind.alias("rank"))
-    for i in range(max_iter):
-        contribs = (
-            e.join(_maybe_broadcast(ranks, small), e.src == ranks.id)
-            .select("dst", (F.col("rank") / F.col("outDegree")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            vertices.join(
-                _maybe_broadcast(contribs, small), vertices.id == contribs.dst, "left"
-            )
-            .select(
-                "id",
-                (
-                    F.lit(reset_prob) * ind
-                    + F.lit(damp) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", F.col("rank").alias("pagerank"))
+    return ranks.select("id", F.col("r0").alias("pagerank"))
 
 
 def pagerank_parallel_personalized(
@@ -308,7 +331,6 @@ def pagerank_parallel_personalized(
     source_ids: list,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """All-sources-at-once personalized PageRank (the GraphFrames
     ``parallelPersonalizedPageRank`` surface): the ``pagerank_personalized``
@@ -316,53 +338,14 @@ def pagerank_parallel_personalized(
     column per source, so each iteration is ONE edge join + ONE aggregate
     regardless of k (that is the 'parallel': k single-source runs would
     scan the edge table k times per round). Returns (id, pageranks
-    array<double>) with entries in ``source_ids`` order. Same semantics
-    per source as the single-source twin (indicator start, reset mass to
-    the source only, dangling mass dropped)."""
+    array<double>) with entries in ``source_ids`` order."""
     if not source_ids:
         raise ValueError("parallel personalized PageRank needs >= 1 source id")
-    damp = 1.0 - reset_prob
-    small = vertices.count() < BROADCAST_VERTEX_LIMIT
-    e = (
-        edges.join(_maybe_broadcast(out_degrees(edges), small), edges.src == F.col("id"))
-        .select("src", "dst", "outDegree")
-        .localCheckpoint(eager=True)
+    ranks, _ = _power_iterate(
+        vertices, edges, [_indicator(s) for s in source_ids], reset_prob, max_iter
     )
-    k = len(source_ids)
-    inds = [
-        F.when(F.col("id") == F.lit(s), F.lit(1.0)).otherwise(F.lit(0.0))
-        for s in source_ids
-    ]
-    ranks = vertices.select("id", *[ind.alias(f"r{j}") for j, ind in enumerate(inds)])
-    for i in range(max_iter):
-        contribs = (
-            e.join(_maybe_broadcast(ranks, small), e.src == ranks.id)
-            .select(
-                "dst",
-                *[
-                    (F.col(f"r{j}") / F.col("outDegree")).alias(f"c{j}")
-                    for j in range(k)
-                ],
-            )
-            .groupBy("dst")
-            .agg(*[F.sum(f"c{j}").alias(f"c{j}") for j in range(k)])
-        )
-        ranks = vertices.join(
-            _maybe_broadcast(contribs, small), vertices.id == contribs.dst, "left"
-        ).select(
-            "id",
-            *[
-                (
-                    F.lit(reset_prob) * inds[j]
-                    + F.lit(damp) * F.coalesce(F.col(f"c{j}"), F.lit(0.0))
-                ).alias(f"r{j}")
-                for j in range(k)
-            ],
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
-        "id", F.array(*[F.col(f"r{j}") for j in range(k)]).alias("pageranks")
+        "id", F.array(*[F.col(f"r{j}") for j in range(len(source_ids))]).alias("pageranks")
     )
 
 
@@ -379,55 +362,14 @@ def pagerank_tol(
     update until the largest per-vertex rank change falls below ``tol``,
     capped at ``max_iter_cap`` rounds. Returns (ranks, iterations run).
 
-    The per-round max-delta probe forces materialization anyway, so every
-    round checkpoints (the bfs_levels argument, not pagerank's cadence).
     Convergence-dependent iteration counts make this mode inherently
     data-dependent -- catalog certification uses the fixed-iteration
     twins; tests pin agreement with a long fixed run."""
-    damp = 1.0 - reset_prob
-    small = vertices.count() < BROADCAST_VERTEX_LIMIT
-    e = (
-        edges.join(_maybe_broadcast(out_degrees(edges), small), edges.src == F.col("id"))
-        .select("src", "dst", "outDegree")
-        .localCheckpoint(eager=True)
+    teleport = F.lit(1.0) if source_id is None else _indicator(source_id)
+    ranks, it = _power_iterate(
+        vertices, edges, [teleport], reset_prob, max_iter_cap, tol=tol
     )
-    if source_id is None:
-        ind = F.lit(1.0)
-        ranks = vertices.select("id", F.lit(1.0).alias("rank"))
-    else:
-        ind = F.when(F.col("id") == F.lit(source_id), F.lit(1.0)).otherwise(F.lit(0.0))
-        ranks = vertices.select("id", ind.alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    it = 0
-    for it in range(1, max_iter_cap + 1):
-        contribs = (
-            e.join(_maybe_broadcast(ranks, small), e.src == ranks.id)
-            .select("dst", (F.col("rank") / F.col("outDegree")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        nxt = (
-            vertices.join(
-                _maybe_broadcast(contribs, small), vertices.id == contribs.dst, "left"
-            )
-            .select(
-                "id",
-                (
-                    F.lit(reset_prob) * ind
-                    + F.lit(damp) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        delta = (
-            nxt.join(ranks.withColumnRenamed("rank", "prev"), "id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        ranks = nxt
-        if delta is not None and delta < tol:
-            break
-    return ranks.select("id", F.col("rank").alias("pagerank")), it
+    return ranks.select("id", F.col("r0").alias("pagerank")), it
 
 
 def connected_components(
@@ -458,7 +400,7 @@ def connected_components(
         .localCheckpoint(eager=True)  # loop-invariant
     )
     # small vertex set -> broadcast the label frame per round so the
-    # (2x) edge table never shuffles (see pagerank for the rationale)
+    # (2x) edge table never shuffles (see _power_iterate for the rationale)
     small = vertices.count() < BROADCAST_VERTEX_LIMIT
     labels = vertices.select("id", F.col("id").alias("component"))
     changed = 1

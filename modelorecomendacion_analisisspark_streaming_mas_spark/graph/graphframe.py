@@ -216,65 +216,28 @@ class GraphFrame:
                 ids, self._edges, reset_prob=resetProbability, tol=tol,
                 source_id=sourceId,
             )
-            od = out_degrees(self._edges)
-            e = (
-                self._edges.join(od, self._edges[SRC] == od[ID])
-                .drop(ID)
-                .withColumn("weight", F.lit(1.0) / F.col("outDegree"))
-                .drop("outDegree")
-            )
-            v = self._vertices.join(ranks, ID, "left").withColumn(
-                "pagerank", F.coalesce(F.col("pagerank"), F.lit(0.0))
-            )
-            return GraphFrame(v, e)
-        if sourceId is not None:
+        elif sourceId is not None:
             ranks = pagerank_personalized(
                 ids, self._edges, source_id=sourceId,
                 reset_prob=resetProbability, max_iter=maxIter,
             )
-            od = out_degrees(self._edges)
-            e = (
-                self._edges.join(od, self._edges[SRC] == od[ID])
-                .drop(ID)
-                .withColumn("weight", F.lit(1.0) / F.col("outDegree"))
-                .drop("outDegree")
-            )
-            # a vertex untouched by the walk has rank exactly 0 (not the
-            # static mode's floor: reset mass goes to the source alone)
-            v = self._vertices.join(ranks, ID, "left").withColumn(
-                "pagerank", F.coalesce(F.col("pagerank"), F.lit(0.0))
-            )
-            return GraphFrame(v, e)
-        if weightCol is not None:
+        elif weightCol is not None:
             ranks = pagerank_weighted(
                 ids, self._edges, weight_col=weightCol,
                 reset_prob=resetProbability, max_iter=maxIter,
-            )
-            wsrc = self._edges.groupBy(F.col(SRC).alias(ID)).agg(
-                F.sum(weightCol).alias("_wsum")
-            )
-            e = (
-                self._edges.join(wsrc, self._edges[SRC] == wsrc[ID])
-                .drop(ID)
-                .withColumn("weight", F.col(weightCol) / F.col("_wsum"))
-                .drop("_wsum")
             )
         else:
             ranks = pagerank(
                 ids, self._edges, reset_prob=resetProbability, max_iter=maxIter
             )
-            od = out_degrees(self._edges)
-            e = (
-                self._edges.join(od, self._edges[SRC] == od[ID])
-                .drop(ID)
-                .withColumn("weight", F.lit(1.0) / F.col("outDegree"))
-                .drop("outDegree")
-            )
+        # a vertex without a rank row gets what the walk would give it:
+        # 0 when reset mass goes to the source alone (sourceId/tol modes),
+        # else the reset mass only (a dangling vertex gets no contributions)
+        floor = 0.0 if tol is not None or sourceId is not None else resetProbability
         v = self._vertices.join(ranks, ID, "left").withColumn(
-            # dangling vertices never receive contributions: reset mass only
-            "pagerank", F.coalesce(F.col("pagerank"), F.lit(resetProbability))
+            "pagerank", F.coalesce(F.col("pagerank"), F.lit(floor))
         )
-        return GraphFrame(v, e)
+        return GraphFrame(v, self._normalized_edges(weightCol))
 
     def parallelPersonalizedPageRank(
         self,
@@ -302,17 +265,22 @@ class GraphFrame:
             reset_prob=resetProbability,
             max_iter=maxIter,
         )
-        od = out_degrees(self._edges)
-        e = (
-            self._edges.join(od, self._edges[SRC] == od[ID])
-            .drop(ID)
-            .withColumn("weight", F.lit(1.0) / F.col("outDegree"))
-            .drop("outDegree")
-        )
         v = self._vertices.join(ranks, ID, "left").withColumn(
             "pageranks", array_to_vector("pageranks")
         )
-        return GraphFrame(v, e)
+        return GraphFrame(v, self._normalized_edges())
+
+    def _normalized_edges(self, weight_col: str | None = None) -> DataFrame:
+        """The edges plus the library's src-normalized ``weight``:
+        1/outDegree, or ``weight_col`` over its per-src sum."""
+        w = F.lit(1.0) if weight_col is None else F.col(weight_col)
+        norm = self._edges.groupBy(F.col(SRC).alias(ID)).agg(F.sum(w).alias("_norm"))
+        return (
+            self._edges.join(norm, self._edges[SRC] == norm[ID])
+            .drop(ID)
+            .withColumn("weight", w / F.col("_norm"))
+            .drop("_norm")
+        )
 
     def connectedComponents(self, algorithm: str = "graphframes", **kw) -> DataFrame:
         """Undirected connected components; returns the vertex DataFrame

@@ -16,6 +16,8 @@ from ..graph.algorithms import (
     decode_vertex_id,
     in_degrees,
     pagerank,
+    pagerank_weighted,
+    weighted_bipartite_edges,
 )
 from . import memo
 from .catalog import register
@@ -118,10 +120,15 @@ LIMIT 100
 
 @register("g02_pagerank_top100", oracle=_pagerank_oracle(10))
 def g02_pagerank_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # 10 join+agg rounds iterate on packed-long ids; decode happens once,
-    # before the (rank, string-id) tie-break ordering the oracle pins
     vertices, edges = _shared_graph(spark, sf_dir)
-    pr = pagerank(vertices, edges, reset_prob=0.15, max_iter=10)
+    return _top100(pagerank(vertices, edges, reset_prob=0.15, max_iter=10))
+
+
+def _top100(pr: DataFrame) -> DataFrame:
+    """The top 100 of an (id, pagerank) frame over packed-long ids, as the
+    unrolled-SQL oracles present them: the rounds iterate on packed longs,
+    and the decode happens once, before the (rank, string-id) tie-break
+    ordering the oracle pins."""
     return (
         pr.select(decode_vertex_id(F.col("id")).alias("id"), "pagerank")
         .orderBy(F.desc("pagerank"), F.asc("id"))
@@ -375,33 +382,6 @@ LIMIT 100
     )
 
 
-def weighted_bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encoded (src, dst, weight) with weight = purchase multiplicity;
-    the weighted twin of bipartite_graph_encoded's edge build (groupBy
-    count instead of distinct -- same single fact-join shuffle)."""
-    from ..graph.algorithms import BROADCAST_VERTEX_LIMIT, _maybe_broadcast
-    from ..sources.readers import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    orders_small = (
-        orders.limit(BROADCAST_VERTEX_LIMIT + 1).count() <= BROADCAST_VERTEX_LIMIT
-    )
-    return (
-        li.join(_maybe_broadcast(orders, orders_small), li.l_orderkey == orders.o_orderkey)
-        # NULL-endpoint drop, mirroring _EDGES_SQL / bipartite_graph_encoded:
-        # a NULL custkey/partkey must not mint a NULL vertex (r14 nullkeys
-        # axis; r14 ADVICE flagged the weighted twin as unfixed).
-        .filter(F.col("o_custkey").isNotNull() & F.col("l_partkey").isNotNull())
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_partkey") * 2 + 1).alias("dst"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("weight"))
-    )
-
-
 @register(
     "g06_weighted_pagerank_top100",
     oracle=_weighted_pagerank_oracle(10),
@@ -409,8 +389,6 @@ def weighted_bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "weight = purchase multiplicity; unrolled-CTE oracle like g02.",
 )
 def g06_weighted_pagerank_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..graph.algorithms import pagerank_weighted
-
     edges = weighted_bipartite_edges(spark, sf_dir).localCheckpoint(eager=True)
     vertices = (
         edges.select(F.col("src").alias("id"))
@@ -418,13 +396,7 @@ def g06_weighted_pagerank_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    pr = pagerank_weighted(vertices, edges, reset_prob=0.15, max_iter=10)
-    return (
-        pr.select(decode_vertex_id(F.col("id")).alias("id"), "pagerank")
-        .orderBy(F.desc("pagerank"), F.asc("id"))
-        .limit(100)
-        .select("id", F.round("pagerank", 6).alias("pagerank"))
-    )
+    return _top100(pagerank_weighted(vertices, edges, reset_prob=0.15, max_iter=10))
 
 
 # --------------------------------------------------------------------------
@@ -789,13 +761,7 @@ def g10_graphframe_notebook_port(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = GraphFrame(v, edges)
     pr = g.pageRank(resetProbability=0.15, maxIter=_G10_ITERS)
-    return (
-        pr.vertices.filter("tipo = 'part'")
-        .select(decode_vertex_id(F.col("id")).alias("id"), "pagerank")
-        .orderBy(F.desc("pagerank"), F.asc("id"))
-        .limit(100)
-        .select("id", F.round("pagerank", 6).alias("pagerank"))
-    )
+    return _top100(pr.vertices.filter("tipo = 'part'"))
 
 
 # --------------------------------------------------------------------------

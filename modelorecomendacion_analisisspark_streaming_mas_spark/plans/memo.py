@@ -34,9 +34,9 @@ import tempfile
 from collections.abc import Callable, Hashable
 from typing import Any, NamedTuple, TypeVar
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import unpersist
 from ..sources.readers import table_fingerprint
 
 T = TypeVar("T")
@@ -113,17 +113,4 @@ def _release(entry: _Entry) -> None:
     values = entry.value if isinstance(entry.value, tuple) else (entry.value,)
     for v in values:
         if isinstance(v, DataFrame):
-            _unpersist(v)
-
-
-def _unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-        # an eager localCheckpoint is a LogicalRDD over a persisted RDD that
-        # DataFrame.unpersist does not touch; free its blocks directly
-        plan = df._jdf.queryExecution().logical()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Py4JError:
-        # the owning context is already stopped: nothing is left to free
-        pass
+            unpersist(v)

@@ -24,6 +24,7 @@ from ..sources.readers import local_rows_df
 from ..sources.streams import (
     REPLAY_SHUFFLE_PARTITIONS,
     file_stream,
+    pin_replay_order,
     run_available_now,
     stage_events_for_replay,
 )
@@ -1039,6 +1040,7 @@ def s25_stream_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d)
         )
+        pin_replay_order(d)
         return d
 
     staged = memo.staged("s25_quarter_events", sf_dir, ("events",), write)
@@ -1120,6 +1122,7 @@ def _staged_new_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
+        pin_replay_order(d)
         return d
 
     return memo.staged("new_docs", sf_dir, ("documents",), write)
@@ -1397,6 +1400,7 @@ def _staged_embeddings(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
+        pin_replay_order(d)
         return d
 
     return memo.staged("embeddings_replay", sf_dir, ("embeddings",), write)
@@ -1858,6 +1862,7 @@ def _staged_corpus_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
+        pin_replay_order(d)
         return d
 
     return memo.staged("corpus_docs", sf_dir, ("documents",), write)

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_parallelism() -> int:
@@ -69,3 +70,17 @@ def get_spark(
 
         spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="spark_ckpt_"))
     return spark
+
+
+def unpersist(df: DataFrame) -> None:
+    """Free the storage behind ``df``: its cache entry, and the blocks of
+    an eager localCheckpoint (a LogicalRDD over a persisted RDD), which
+    ``DataFrame.unpersist`` leaves alone."""
+    try:
+        df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Py4JError:
+        # the owning context is already stopped: nothing is left to free
+        pass

@@ -14,6 +14,8 @@ stateful plans.
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import uuid
 from collections.abc import Callable
@@ -38,8 +40,8 @@ def stage_events_for_replay(
     Returns the schema for the file-stream reader.
 
     The staged files are EVENT-TIME ORDERED (a global orderBy writes
-    range-partitioned part files whose lexicographic names follow ts; the
-    file source replays same-mtime files in path order): historical
+    range-partitioned part files whose lexicographic names follow ts, and
+    pin_replay_order makes those names the replay order): historical
     replay in event-time order is the standard backfill discipline, and
     it guarantees no sane row is ever declared late REGARDLESS of how
     availableNow splits the files into micro-batches. Unordered staging
@@ -59,22 +61,25 @@ def stage_events_for_replay(
     else:
         ev = ev.orderBy("ts", "event_id")
     ev.write.mode("overwrite").parquet(out_dir)
-    # Spark's FileStreamSource orders files by MODIFICATION TIME and uses
-    # path only to break exact ties. Parallel range-partitioned writes can
-    # complete out of ts order, so without this a later-ts part file could
-    # land in an earlier micro-batch and late-drop older rows
-    # nondeterministically (r14 ADVICE). Pinning every part file to one
-    # mtime makes the lexicographic part names -- which DO follow the ts
-    # ranges -- the effective replay order.
-    import glob as _glob
-    import os as _os
-
-    parts = sorted(_glob.glob(_os.path.join(out_dir, "part-*")))
-    if parts:
-        t = _os.stat(parts[0]).st_mtime
-        for p in parts:
-            _os.utime(p, (t, t))
+    pin_replay_order(out_dir)
     return ev.schema
+
+
+def pin_replay_order(staged_dir: str) -> None:
+    """Make the file source replay ``staged_dir``'s part files in path
+    order, one second of mtime apart.
+
+    Spark's FileStreamSource orders files by modification time alone and
+    keeps directory-listing order among equal mtimes, and that order
+    changes from one write to the next (a part name carries the write's
+    UUID). Parallel writes also finish out of part order. So neither the
+    write's own mtimes nor one shared mtime decide which part a
+    micro-batch reads; mtimes that increase in path order do."""
+    parts = sorted(glob.glob(os.path.join(staged_dir, "part-*")))
+    if parts:
+        t = os.stat(parts[0]).st_mtime_ns
+        for i, p in enumerate(parts):
+            os.utime(p, ns=(t + i * 10**9, t + i * 10**9))
 
 
 def file_stream(

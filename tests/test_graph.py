@@ -396,3 +396,45 @@ def test_g15_entry_structural_invariants(spark, sf_dir):
         # up to 5e-7 of rounding, so the mass bound gets that allowance
         assert (df[col] >= 0).all() and df[col].sum() <= 1.0 + 25 * 5e-7
     assert int(df["in_deg"].sum()) == edges.count()
+
+
+def _result_rdd_id(df) -> int:
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.getClass().getSimpleName() != "LogicalRDD":
+        plan = plan.child()
+    return plan.rdd().id()
+
+
+def test_pagerank_modes_leave_only_their_result_persisted(spark):
+    """Every PageRank mode releases its edge+normalizer frame and each
+    superseded rank checkpoint: a call adds exactly one persisted RDD,
+    the result's own checkpoint, which keeps reading the same rows."""
+    from modelorecomendacion_analisisspark_streaming_mas_spark.graph.algorithms import (
+        pagerank_parallel_personalized,
+        pagerank_personalized,
+        pagerank_tol,
+        pagerank_weighted,
+    )
+
+    sc = spark.sparkContext._jsc.sc()
+    vertices = spark.createDataFrame([(i,) for i in range(1, 6)], "id long")
+    edges = spark.createDataFrame(
+        [(1, 2, 3), (2, 3, 1), (3, 1, 2), (1, 4, 1), (4, 5, 1)],
+        "src long, dst long, weight long",
+    )
+    runs = {
+        "pagerank": lambda: pagerank(vertices, edges, max_iter=3),
+        "weighted": lambda: pagerank_weighted(vertices, edges, max_iter=3),
+        "personalized": lambda: pagerank_personalized(vertices, edges, 1, max_iter=3),
+        "parallel": lambda: pagerank_parallel_personalized(
+            vertices, edges, [1, 4], max_iter=3
+        ),
+        "tol": lambda: pagerank_tol(vertices, edges, tol=1e-9, max_iter_cap=2)[0],
+    }
+    for name, run in runs.items():
+        before = {i.id() for i in sc.getRDDStorageInfo()}
+        result = run()
+        left = {i.id() for i in sc.getRDDStorageInfo()} - before
+        assert left == {_result_rdd_id(result)}, (name, left)
+        rows = sorted(result.collect())
+        assert len(rows) == 5 and rows == sorted(result.collect()), name

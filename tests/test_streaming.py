@@ -964,6 +964,42 @@ def test_staged_replay_schemas_match_r7_literals(spark, sf_dir):
         assert st.schema == _parse_datatype_string(literal), (literal, st.schema)
 
 
+def test_replay_stagings_replay_their_parts_in_path_order(spark, sf_dir):
+    """The file source orders files by mtime alone and keeps listing
+    order among equal mtimes, so every replay staging gives its part
+    files mtimes that increase in path order, and a one-file-per-trigger
+    replay then reads the parts in path order, one per micro-batch."""
+    import glob
+
+    from modelorecomendacion_analisisspark_streaming_mas_spark.plans.streamq import (
+        _staged_corpus_docs,
+        _staged_embeddings,
+        _staged_new_docs,
+        _staged_replay,
+    )
+
+    events_dir, schema = _staged_replay(spark, sf_dir, n_files=4)
+    staged = [
+        _staged_new_docs(spark, sf_dir),
+        _staged_embeddings(spark, sf_dir),
+        _staged_corpus_docs(spark, sf_dir),
+        events_dir,
+    ]
+    parts = {d: sorted(glob.glob(os.path.join(d, "part-*"))) for d in staged}
+    assert len(parts[events_dir]) == 4
+    for d, ps in parts.items():
+        mtimes = [os.stat(p).st_mtime_ns for p in ps]
+        assert mtimes == sorted(set(mtimes)), (d, mtimes)
+    batches = []
+    run_available_now(
+        file_stream(spark, events_dir, schema, max_files_per_trigger=1).select(
+            F.input_file_name().alias("f")
+        ),
+        lambda df, _: batches.append(sorted(os.path.basename(r.f) for r in df.distinct().collect())),
+    )
+    assert batches == [[os.path.basename(p)] for p in parts[events_dir]]
+
+
 def test_s33_readback_collapses_duplicate_appends(spark, sf_dir, monkeypatch):
     """foreachBatch is at-least-once: a retried micro-batch whose append
     already committed re-appends the same rows. Simulate it by doubling
@@ -1099,23 +1135,6 @@ def test_exact_cents_sum_fail_loud_off_grid():
         _exact_cents_sum(pd.Series([float("nan")]))
     with pytest.raises(ValueError, match="cents grid"):
         _exact_cents_sum(pd.Series([float("inf")]))
-
-
-def test_staged_replay_part_files_share_one_mtime(spark, sf_dir, tmp_path):
-    """r14 ADVICE (medium): FileStreamSource orders files by MTIME (path
-    only breaks exact ties), and parallel range-partitioned writes can
-    finish out of ts order -- so staging must pin every part file to one
-    mtime, making the lexicographic part names (which follow the ts
-    ranges) the effective replay order."""
-    import glob
-    import os
-
-    d = str(tmp_path / "replay")
-    stage_events_for_replay(spark, sf_dir, d, n_files=4)
-    parts = glob.glob(os.path.join(d, "part-*"))
-    assert len(parts) == 4
-    mtimes = {os.stat(p).st_mtime for p in parts}
-    assert len(mtimes) == 1, f"part-file mtimes differ: {sorted(mtimes)}"
 
 
 def test_derive_state_partitions_tracks_keys(spark):
