@@ -165,40 +165,6 @@ def extract_image_features(df: DataFrame, decode=fake_decode_image) -> DataFrame
     return df.mapInPandas(feats, schema="id long, features array<double>, width int")
 
 
-def extract_image_features_arrow(df: DataFrame, decode=fake_decode_image) -> DataFrame:
-    """``mapInArrow`` twin of ``extract_image_features``: consumes raw
-    ``pyarrow.RecordBatch`` objects -- no Arrow->pandas conversion, no
-    per-row ``iterrows`` -- and emits feature batches built columnar-side.
-
-    This is the high-throughput media path at 100 TB: pandas conversion
-    copies every binary blob into Python objects per batch, while Arrow
-    hands over zero-copy buffers; only the decode itself touches bytes.
-    Differentially tested against the pandas twin (identical output)."""
-    import pyarrow as pa
-
-    def feats(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            ids = rb.column(rb.schema.get_field_index("id"))
-            contents = rb.column(rb.schema.get_field_index("content"))
-            metas = rb.column(rb.schema.get_field_index("meta"))
-            widths = metas.field("width") if isinstance(metas, pa.StructArray) else None
-            out_feats, out_width = [], []
-            for i in range(rb.num_rows):
-                px = decode(contents[i].as_py())
-                out_feats.append(image_feature_vector(px))
-                out_width.append(widths[i].as_py() if widths is not None else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(out_feats, type=pa.list_(pa.float64())),
-                    pa.array(out_width, type=pa.int32()),
-                ],
-                names=["id", "features", "width"],
-            )
-
-    return df.mapInArrow(feats, schema="id long, features array<double>, width int")
-
-
 def resize_plan(df: DataFrame, max_side: int) -> DataFrame:
     """Metadata-only resize planning: compute target dims WITHOUT touching
     the binary column (pure column pruning -- the scan never reads blobs)."""

@@ -1,5 +1,4 @@
-"""Similarity search over embedding columns (north-star surface):
-brute-force cosine top-k baseline + random-hyperplane-LSH bucketed variant.
+"""Similarity search over embedding columns (north-star surface).
 
 Scale shapes:
 
@@ -8,10 +7,22 @@ Scale shapes:
   JVM-side higher-order-function arithmetic -- no Python, no shuffle except
   the final per-query top-k (grouped window over |Q| keys). This is the
   exactness baseline.
+* ``cosine_near_dup_matmul``: every (query, candidate) pair above a cosine
+  threshold, one Arrow-batched NumPy matmul per candidate batch against a
+  collected, broadcast query matrix; no shuffle.
 * ``lsh_cosine_topk``: random-hyperplane signatures bucket both sides; dot
   products only run within matching buckets, turning |Q| x |C| into
   sum over buckets |Q_b| x |C_b|. Recall is tested against the brute-force
-  baseline in tests/test_similarity.py.
+  baseline in tests/test_ann_recall.py.
+* The pinned-centroid coarse quantizer (``CENTROID_STRIDE``,
+  ``pinned_centroids``, ``rank_centroids``): every vector ranked against
+  the deterministic centroid set ``vec_id % CENTROID_STRIDE == 0``. The
+  IVF and NSW searches below and the catalog's list-based entries (e06,
+  e07, e12, d14, s28, s29) all build on it.
+* ``ivf_cosine_topk``: IVF-flat -- exact cosine only within each query's
+  ``nprobe`` nearest centroid lists.
+* ``nsw_beam_topk``: navigable-small-world graph over the centroid lists
+  plus a fixed-width beam search.
 """
 
 from __future__ import annotations
@@ -38,9 +49,62 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
-    v = _as_double(F.col(vec_col))
-    return df.withColumn(out, F.sqrt(_dot(v, v)))
+def with_norm(df: DataFrame) -> DataFrame:
+    """``df`` plus ``vn``, the L2 norm of its double-array column ``v``."""
+    return df.withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
+
+
+# The coarse quantizer's centroids are the pinned corpus vectors
+# vec_id % CENTROID_STRIDE == 0: deterministic, so every index built on
+# them (and its SQL oracle) is reproducible from the data alone, unlike
+# seeded k-means.
+CENTROID_STRIDE = 37
+
+
+def pinned_centroids(e: DataFrame) -> DataFrame:
+    """The centroid table ``(cid, cv, cvn)`` of a ``(vec_id, v, vn)``
+    frame."""
+    return e.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cvn")
+    )
+
+
+def rank_centroids(e: DataFrame, cent: DataFrame, digits: int | None = None) -> DataFrame:
+    """Rank every centroid of ``cent`` for every vector of ``e``: the
+    columns of ``e`` (``vec_id``, ``v``, ``vn`` and any extras, which pass
+    through) plus ``cid`` and ``crn``, the centroid's rank by cosine
+    ``cc`` descending, ties to the lower ``cid``. ``crn == 1`` is the
+    vector's inverted list; ``crn <= nprobe`` its probed lists. ``digits``
+    rounds ``cc`` before ranking, for oracles that rank on a rounded
+    cosine.
+
+    The centroid table is tiny and broadcast, so the only shuffle is the
+    per-vector window keyed by ``vec_id``. The cosine stays a SQL dot
+    product: the oracles' hash-exactness depends on its summation order.
+
+    What stays with the caller:
+
+    * spreading ``e``. A replay-sized embeddings parquet arrives as ONE
+      split, which serializes this |corpus| x |centroids| dot-product
+      lattice onto a single core; ``spread`` widens it (a no-op on real
+      multi-split scans). Selecting before the spread moves only the
+      consumed columns through the widening shuffle.
+    * which ``crn`` rows to keep, and whether to cache the result. The
+      scan is the dominant build CPU, so a result with several consumers
+      (lists and probes in IVF; home, candidates, hubs and entry beam in
+      NSW) is persisted: unpersisted, each consumer re-executes the whole
+      cross join and window.
+    """
+    cc = _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cvn"))
+    if digits is not None:
+        cc = F.round(cc, digits)
+    wc = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cid"))
+    return (
+        e.crossJoin(F.broadcast(cent))
+        .withColumn("cc", cc)
+        .withColumn("crn", F.row_number().over(wc))
+        .select(*e.columns, "cid", "crn")
+    )
 
 
 def cosine_topk_bruteforce(
@@ -164,65 +228,35 @@ def cosine_near_dup_matmul(
 
 def ivf_cosine_topk(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    centroid_stride: int = 37,
     query_pred=None,
 ) -> DataFrame:
-    """IVF-flat approximate nearest neighbors, fully deterministic (and
-    therefore SQL-oracle-checkable, unlike seeded k-means): the coarse
-    quantizer is the pinned subset ``vec_id % centroid_stride == 0``.
+    """IVF-flat approximate nearest neighbors over ``(vec_id, embedding)``,
+    fully deterministic (and therefore SQL-oracle-checkable) through the
+    pinned-centroid coarse quantizer.
 
     Structure: (1) assign every vector to its nearest centroid by cosine
     (its inverted list); (2) each query probes its ``nprobe`` nearest
     lists; (3) exact cosine top-k runs only within probed lists. The
-    centroid table is tiny and broadcast; the only shuffles are the
-    per-vector argmax window (keyed by ``id_col``, perfectly spread) and
-    the list equi-join. Search cost drops from |Q|x|C| to
+    only shuffles are the quantizer's per-vector window and the list
+    equi-join. Search cost drops from |Q|x|C| to
     |Q| x nprobe x avg-list-size.
     """
     # per-row norm computed once (see cosine_topk_bruteforce: the per-pair
     # recompute was the dominant cost; values are bit-identical)
-    # spread: a replay-sized embeddings parquet arrives as ONE split, which
-    # serializes the |corpus| x |centroids| HOF dot-product lattice below
-    # onto a single core (no-op on real multi-split scans -- the same
-    # discipline as cosine_topk_bruteforce / lsh_cosine_topk). select
-    # FIRST so the widening repartition shuffles only (id, vec), never
-    # unconsumed payload columns.
-    e = spread(
-        embeddings.select(
-            F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-        )
+    e = with_norm(
+        spread(embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v")))
     )
-    e = e.withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cent = e.filter(F.col("vid") % centroid_stride == 0).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cvn")
-    )
-    scored = e.crossJoin(F.broadcast(cent)).withColumn(
-        "cc", _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cvn"))
-    )
-    wc = Window.partitionBy("vid").orderBy(F.desc("cc"), F.asc("cid"))
-    ranked = (
-        scored.withColumn("crn", F.row_number().over(wc))
-        .select("vid", "v", "vn", "cid", "crn")
-        # the |corpus| x |centroids| quantizer scan is the dominant build
-        # CPU and feeds multiple consumers (lists/probes here; home/cand/
-        # hub/entry-beam in the NSW build); unpersisted, EACH consumer
-        # re-executed the whole crossJoin + window pipeline (r16).
-        # Spillable MEMORY_AND_DISK cache, one row per (vector, ranked
-        # centroid) -- the same footprint the window shuffle already pays.
-        .persist()
-    )
+    ranked = rank_centroids(e, pinned_centroids(e)).persist()
     lists = ranked.filter(F.col("crn") == 1).select(
-        F.col("vid").alias("neighbor_id"), F.col("v").alias("nv"), F.col("vn").alias("nn"), "cid"
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), F.col("vn").alias("nn"), "cid"
     )
     probes = ranked.filter(F.col("crn") <= nprobe)
     if query_pred is not None:
-        probes = probes.filter(query_pred(F.col("vid")))
+        probes = probes.filter(query_pred(F.col("vec_id")))
     probes = probes.select(
-        F.col("vid").alias("query_id"), F.col("v").alias("qv"), F.col("vn").alias("qn"), "cid"
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("vn").alias("qn"), "cid"
     )
 
     pairs = probes.join(lists, "cid").filter(F.col("query_id") != F.col("neighbor_id"))
@@ -408,21 +442,18 @@ def lsh_cosine_topk(
 
 def nsw_beam_topk(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     beam_width: int = 8,
     rounds: int = 3,
     neighbors_per_node: int = 4,
-    centroid_stride: int = 37,
     query_pred=None,
 ) -> DataFrame:
     """Graph-traversal ANN (the HNSW/NSW family's flat tier), fully
     deterministic and therefore SQL-oracle-checkable: a pinned
     navigable-small-world graph + fixed-width beam search.
 
-    Structure (every stage reuses e03's pinned coarse quantizer, so the
-    whole index is reproducible from the data alone):
+    Structure (every stage reuses the pinned-centroid coarse quantizer, so
+    the whole index is reproducible from the data alone):
 
     1. NEIGHBOR GRAPH, two layers like HNSW: layer 0 is short-range --
        candidates for vector x are the members of x's top-2 centroid
@@ -449,43 +480,17 @@ def nsw_beam_topk(
     NSW family. Recall vs brute force is pytest-gated
     (tests/test_ann_recall.py).
     """
-    # spread: a replay-sized embeddings parquet arrives as ONE split, which
-    # serializes the |corpus| x |centroids| HOF dot-product lattice below
-    # onto a single core (no-op on real multi-split scans -- the same
-    # discipline as cosine_topk_bruteforce / lsh_cosine_topk). select
-    # FIRST so the widening repartition shuffles only (id, vec), never
-    # unconsumed payload columns.
-    e = spread(
-        embeddings.select(
-            F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
-        )
+    e = with_norm(
+        spread(embeddings.select("vec_id", _as_double(F.col("embedding")).alias("v")))
     )
-    e = e.withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cent = e.filter(F.col("vid") % centroid_stride == 0).select(
-        F.col("vid").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cvn")
-    )
-    scored = e.crossJoin(F.broadcast(cent)).withColumn(
-        "cc", _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cvn"))
-    )
-    wc = Window.partitionBy("vid").orderBy(F.desc("cc"), F.asc("cid"))
-    ranked = (
-        scored.withColumn("crn", F.row_number().over(wc))
-        .select("vid", "v", "vn", "cid", "crn")
-        # the |corpus| x |centroids| quantizer scan is the dominant build
-        # CPU and feeds multiple consumers (lists/probes here; home/cand/
-        # hub/entry-beam in the NSW build); unpersisted, EACH consumer
-        # re-executed the whole crossJoin + window pipeline (r16).
-        # Spillable MEMORY_AND_DISK cache, one row per (vector, ranked
-        # centroid) -- the same footprint the window shuffle already pays.
-        .persist()
-    )
+    ranked = rank_centroids(e, pinned_centroids(e)).persist()
     home = ranked.filter(F.col("crn") == 1).select(
-        F.col("vid").alias("hid"), F.col("v").alias("hv"), F.col("vn").alias("hn"), "cid"
+        F.col("vec_id").alias("hid"), F.col("v").alias("hv"), F.col("vn").alias("hn"), "cid"
     )
     # graph candidates: x's probe-2 lists' members; top-R per x, symmetrized
     cand = (
         ranked.filter(F.col("crn") <= 2)
-        .select(F.col("vid").alias("src"), "v", "vn", "cid")
+        .select(F.col("vec_id").alias("src"), "v", "vn", "cid")
         .join(home, "cid")
         .filter(F.col("src") != F.col("hid"))
         .withColumn("cos", _dot(F.col("v"), F.col("hv")) / (F.col("vn") * F.col("hn")))
@@ -499,8 +504,8 @@ def nsw_beam_topk(
     # layer-1 hub edges: vector <-> its home centroid (a centroid's own
     # home is itself; drop the self-loop)
     hub = (
-        ranked.filter((F.col("crn") == 1) & (F.col("vid") != F.col("cid")))
-        .select(F.col("vid").alias("src"), F.col("cid").alias("dst"))
+        ranked.filter((F.col("crn") == 1) & (F.col("vec_id") != F.col("cid")))
+        .select(F.col("vec_id").alias("src"), F.col("cid").alias("dst"))
     )
     links = nn.union(hub)
     und = (
@@ -511,15 +516,15 @@ def nsw_beam_topk(
 
     queries = e
     if query_pred is not None:
-        queries = queries.filter(query_pred(F.col("vid")))
+        queries = queries.filter(query_pred(F.col("vec_id")))
     q = queries.select(
-        F.col("vid").alias("query_id"), F.col("v").alias("qv"), F.col("vn").alias("qn")
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("vn").alias("qn")
     )
 
     beam_ranked = ranked.filter(F.col("crn") <= 2)
     if query_pred is not None:
-        beam_ranked = beam_ranked.filter(query_pred(F.col("vid")))
-    beam = beam_ranked.select(F.col("vid").alias("query_id"), F.col("cid").alias("node"))
+        beam_ranked = beam_ranked.filter(query_pred(F.col("vec_id")))
+    beam = beam_ranked.select(F.col("vec_id").alias("query_id"), F.col("cid").alias("node"))
 
     wq = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("node"))
     for _ in range(rounds):
@@ -527,7 +532,7 @@ def nsw_beam_topk(
             beam.join(und, beam.node == und.src).select("query_id", F.col("dst").alias("node"))
         ).distinct()
         rescored = (
-            frontier.join(e, frontier.node == e.vid)
+            frontier.join(e, frontier.node == e.vec_id)
             .join(F.broadcast(q), "query_id")
             .withColumn("cos", _dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("vn")))
         )

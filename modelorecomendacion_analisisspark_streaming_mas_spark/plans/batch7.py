@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.similarity import CENTROID_STRIDE, pinned_centroids, rank_centroids, with_norm
 from ..sources.readers import load_table
 from .catalog import disc_money_sum_spark, disc_money_sum_sql, grid_mean_spark, grid_mean_sql, register
 
@@ -972,7 +973,7 @@ _E07_LABEL = 3
 
 _E07_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % 37 = 0),
+cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT e.vec_id, e.label, e.v, cent.cid,
          list_dot_product(e.v, cent.cv)
@@ -1010,19 +1011,8 @@ def e07_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _as_double, _dot
 
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("v")
-    ).withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cent = e.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("vn").alias("cvn")
-    )
-    scored = e.crossJoin(F.broadcast(cent)).withColumn(
-        "cc", _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cvn"))
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cid"))
-    ranked = scored.withColumn("crn", F.row_number().over(wc)).select(
-        "vec_id", "label", "v", "vn", "cid", "crn"
-    )
+    e = with_norm(emb.select("vec_id", "label", _as_double(F.col("embedding")).alias("v")))
+    ranked = rank_centroids(e, pinned_centroids(e))
     # predicate applied BEFORE scoring: non-matching candidates never
     # reach the dot product (the pre-filter plan)
     lists = ranked.filter(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_hash32, tokenize
+from ..operators.similarity import CENTROID_STRIDE, pinned_centroids, rank_centroids, with_norm
 from ..sources.readers import load_table
 from .catalog import grid_mean_spark, grid_mean_sql, register
 
@@ -725,14 +726,13 @@ def e08_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Assignment rank quantized to 12dp on both sides (e05's device).
 # --------------------------------------------------------------------------
 
-_D14_STRIDE = 37
 _D14_TAU = 0.30
 
 _D14_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
 cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn
-         FROM n WHERE vec_id % {_D14_STRIDE} = 0),
+         FROM n WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT n.vec_id, n.v, n.nrm, cent.cid,
          round(list_dot_product(n.v, cent.cv) / (n.nrm * cent.cn), 12) AS cc
@@ -769,23 +769,11 @@ def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import spread
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n = spread(emb).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cent = n.filter(F.col("vec_id") % _D14_STRIDE == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = n.crossJoin(F.broadcast(cent)).withColumn(
-        "cc",
-        F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 12),
-    )
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cid"))
+    n = with_norm(spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v")))
     lists = (
-        scored.withColumn("crn", F.row_number().over(wv))
+        rank_centroids(n, pinned_centroids(n), digits=12)
         .filter(F.col("crn") == 1)
-        .select("vec_id", "v", "nrm", "cid")
+        .select("vec_id", "v", "vn", "cid")
         # a real SemDeDup pipeline persists the cluster assignment (it is
         # reused downstream); materializing here also feeds the blowup
         # guard below without a second corpus scan
@@ -811,11 +799,11 @@ def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     a = lists.select(
         "cid", F.col("vec_id").alias("a_id"),
-        F.col("v").alias("av"), F.col("nrm").alias("an"),
+        F.col("v").alias("av"), F.col("vn").alias("an"),
     )
     b = lists.select(
         "cid", F.col("vec_id").alias("b_id"),
-        F.col("v").alias("bv"), F.col("nrm").alias("bn"),
+        F.col("v").alias("bv"), F.col("vn").alias("bn"),
     )
     pairs = (
         a.join(b, "cid")

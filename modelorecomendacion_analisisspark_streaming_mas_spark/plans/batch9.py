@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import CENTROID_STRIDE, pinned_centroids, rank_centroids, with_norm
 from ..sources.readers import load_table
 from .catalog import grid_mean_spark, grid_mean_sql, register, shingle_rows_sql
 
@@ -533,7 +534,6 @@ def d16_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of integers and an exact-ratio round.
 # --------------------------------------------------------------------------
 
-_E12_STRIDE = 37
 _E12_COMPACT_BELOW = 0.75
 
 _E12_ORACLE = f"""
@@ -541,7 +541,7 @@ WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
 cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn
-         FROM n WHERE vec_id % {_E12_STRIDE} = 0),
+         FROM n WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT n.vec_id, cent.cid,
          round(list_dot_product(n.v, cent.cv) / (n.nrm * cent.cn), 12) AS cc
@@ -575,30 +575,13 @@ FROM agg ORDER BY cid
     "propagation) and s28 (streaming ingest).",
 )
 def e12_index_tombstone_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.similarity import _as_double, _dot
+    from ..operators.similarity import _as_double
     from ..sources.readers import spread
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n = (
-        spread(emb)
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    )
-    cent = n.filter(F.col("vec_id") % _E12_STRIDE == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cid"))
+    n = with_norm(spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v")))
     lists = (
-        n.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "cc",
-            F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 12),
-        )
-        .withColumn("crn", F.row_number().over(wc))
+        rank_centroids(n, pinned_centroids(n), digits=12)
         .filter(F.col("crn") == 1)
         .select("vec_id", "cid")
     )
@@ -647,7 +630,7 @@ _COS = (
 def _e13_oracle(rounds: int = _E13_ROUNDS) -> str:
     ctes = [
         "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        "cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % 37 = 0)",
+        f"cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {CENTROID_STRIDE} = 0)",
         f"""scored AS (
   SELECT e.vec_id, e.v, cent.cid, {_COS.format(a='e.v', b='cent.cv')} AS cc
   FROM e, cent

@@ -19,6 +19,7 @@ from ..graph.algorithms import (
     pagerank_weighted,
     weighted_bipartite_edges,
 )
+from ..session import unpersist
 from . import memo
 from .catalog import register
 
@@ -396,7 +397,12 @@ def g06_weighted_pagerank_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    return _top100(pagerank_weighted(vertices, edges, reset_prob=0.15, max_iter=10))
+    pr = pagerank_weighted(vertices, edges, reset_prob=0.15, max_iter=10)
+    # the result is the kernel's own final checkpoint: it no longer reads
+    # the inputs, so their blocks go now rather than at the next JVM GC
+    unpersist(edges)
+    unpersist(vertices)
+    return _top100(pr)
 
 
 # --------------------------------------------------------------------------

@@ -16,7 +16,15 @@ from pyspark.sql import functions as F
 
 from ..functions.text import ROLLING_BASE, ROLLING_MOD, rolling_hash, shingles, tokenize
 from ..operators.dedup import ngram_jaccard_join
-from ..operators.similarity import cosine_near_dup_matmul, ivf_cosine_topk
+from ..operators.similarity import (
+    CENTROID_STRIDE,
+    _as_double,
+    cosine_near_dup_matmul,
+    ivf_cosine_topk,
+    pinned_centroids,
+    rank_centroids,
+    with_norm,
+)
 from ..sources.readers import load_table, spread
 from .catalog import register, shingle_rows_sql
 
@@ -108,9 +116,9 @@ def d05_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle -- the IVF structure itself is verified, not just row counts.
 # --------------------------------------------------------------------------
 
-_E03_ORACLE = """
+_E03_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % 37 = 0),
+cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT e.vec_id, e.v, cent.cid,
          list_dot_product(e.v, cent.cv)
@@ -714,12 +722,11 @@ def mm06_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _E06_NPROBE = 2
-_E06_CENT_STRIDE = 37
 
 _E06_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), cent AS (SELECT vec_id AS ccid, v AS cv FROM e WHERE vec_id % {_E06_CENT_STRIDE} = 0),
+), cent AS (SELECT vec_id AS ccid, v AS cv FROM e WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT e.vec_id, e.v, cent.ccid,
          list_dot_product(e.v, cent.cv)
@@ -782,43 +789,20 @@ FROM approx QUALIFY rn <= {_E04_TOPK}
 def e06_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.similarity import _as_double, _dot
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # spread AFTER the select so the widening shuffle moves only the two
-    # consumed columns (never `label`); a replay-sized embeddings parquet
-    # arrives as ONE split, serializing the |corpus| x |centroids| coarse
-    # scoring below onto a single core (no-op on real multi-split scans
-    # -- the ivf_cosine_topk discipline, r16).
-    e = spread(
-        emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    ).withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    cent = e.filter(F.col("vec_id") % _E06_CENT_STRIDE == 0).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("cv"), F.col("vn").alias("cvn")
-    )
-    scored = e.crossJoin(F.broadcast(cent)).withColumn(
-        "cc", _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cvn"))
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("ccid"))
-    ranked = (
-        scored.withColumn("crn", F.row_number().over(wc))
-        .select("vec_id", "ccid", "crn")
-        # the coarse quantizer feeds BOTH lists and probes; unpersisted,
-        # each consumer re-executed the whole crossJoin + window pipeline
-        # -- the exact defect fixed in e03/e13 (r16), applied to the third
-        # family member (r16 VERDICT item 3). Narrow (vec_id, ccid, crn)
-        # rows only: the full vectors never enter the cache.
-        .persist()
-    )
+    e = with_norm(spread(emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))))
+    # narrow (vec_id, cid, crn) rows only: the full vectors never enter
+    # the cache that lists and probes share
+    ranked = rank_centroids(e, pinned_centroids(e)).select("vec_id", "cid", "crn").persist()
     lists = ranked.filter(F.col("crn") == 1).select(
-        F.col("vec_id").alias("neighbor_id"), "ccid"
+        F.col("vec_id").alias("neighbor_id"), "cid"
     )
     probes = (
         ranked.filter((F.col("crn") <= _E06_NPROBE) & (F.col("vec_id") < 10))
-        .select(F.col("vec_id").alias("query_id"), "ccid")
+        .select(F.col("vec_id").alias("query_id"), "cid")
     )
     cand = (
-        probes.join(lists, "ccid")
+        probes.join(lists, "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.numeric import cents_sum_spark, valid_cents_spark
+from ..operators.similarity import CENTROID_STRIDE, pinned_centroids, rank_centroids, with_norm
 
 from ..sources.readers import local_rows_df
 from ..sources.streams import (
@@ -1364,11 +1365,9 @@ def s27_stream_psi_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from exact integers -- zero float-accumulation risk).
 # --------------------------------------------------------------------------
 
-_S28_STRIDE = 37
-
 _S28_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {_S28_STRIDE} = 0),
+cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT e.vec_id, cent.cid,
          list_dot_product(e.v, cent.cv)
@@ -1416,34 +1415,20 @@ def _staged_embeddings(spark: SparkSession, sf_dir: str) -> str:
     "assignment exactly.",
 )
 def s28_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.similarity import _as_double, _dot
+    from ..operators.similarity import _as_double
     from ..sources.readers import load_table
 
+    def vectors(df):
+        return with_norm(df.select("vec_id", _as_double(F.col("embedding")).alias("v")))
+
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.filter(F.col("vec_id") % _S28_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("cid"),
-            _as_double(F.col("embedding")).alias("cv"),
-        )
-        .withColumn("cvn", F.sqrt(_dot(F.col("cv"), F.col("cv"))))
-        # the static quantizer: built once, broadcast to every batch
-        .localCheckpoint(eager=True)
-    )
+    # the static quantizer: built once, broadcast to every batch
+    cent = pinned_centroids(vectors(emb)).localCheckpoint(eager=True)
     stream = _staged_replay_stream(spark, _staged_embeddings(spark, sf_dir))
 
     def ingest(batch_df):
-        batch = batch_df.select(
-            "vec_id", _as_double(F.col("embedding")).alias("v")
-        ).withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
-        scored = batch.crossJoin(F.broadcast(cent)).withColumn(
-            "cc", _dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cvn"))
-        )
-        wc = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cid"))
         assigned = (
-            scored.withColumn("crn", F.row_number().over(wc))
+            rank_centroids(vectors(batch_df), cent)
             .filter(F.col("crn") == 1)
             .select("vec_id", "cid")
         )
@@ -1491,7 +1476,6 @@ def s28_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # discipline, vector-valued state.
 # --------------------------------------------------------------------------
 
-_S29_STRIDE = 37
 _S29_TAU = 0.30
 _S29_MAX_LIST = 50_000
 
@@ -1499,7 +1483,7 @@ _S29_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
 cent AS (SELECT vec_id AS cid, v AS cv, nrm AS cn
-         FROM n WHERE vec_id % {_S29_STRIDE} = 0),
+         FROM n WHERE vec_id % {CENTROID_STRIDE} = 0),
 scored AS (
   SELECT n.vec_id, n.v, n.nrm, cent.cid,
          round(list_dot_product(n.v, cent.cv) / (n.nrm * cent.cn), 12) AS cc
@@ -1541,36 +1525,17 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
     from ..sources.readers import load_table, spread
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n = (
-        spread(emb)
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    )
-    cent = (
-        n.filter(F.col("vec_id") % _S29_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
-        # the quantizer: built once, broadcast into every micro-batch
-        .localCheckpoint(eager=True)
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cid"))
+    n = with_norm(spread(emb).select("vec_id", _as_double(F.col("embedding")).alias("v")))
+    # the quantizer: built once, broadcast into every micro-batch
+    cent = pinned_centroids(n).localCheckpoint(eager=True)
     idx = (
-        n.filter(F.col("vec_id") % 2 == 0)
-        .crossJoin(F.broadcast(cent))
-        .withColumn(
-            "cc",
-            F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 12),
-        )
-        .withColumn("crn", F.row_number().over(wc))
+        rank_centroids(n.filter(F.col("vec_id") % 2 == 0), cent, digits=12)
         .filter(F.col("crn") == 1)
         .select(
             "cid",
             F.col("vec_id").alias("dup_of"),
             F.col("v").alias("iv"),
-            F.col("nrm").alias("inrm"),
+            F.col("vn").alias("inrm"),
         )
         # the persistent index: clustered ONCE, probed by every batch
         .localCheckpoint(eager=True)
@@ -1595,22 +1560,13 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     def probe(batch_df):
-        batch = (
+        batch = with_norm(
             batch_df.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-            .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-            .localCheckpoint(eager=True)
-        )
+        ).localCheckpoint(eager=True)
         assigned = (
-            batch.crossJoin(F.broadcast(cent))
-            .withColumn(
-                "cc",
-                F.round(
-                    _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")), 12
-                ),
-            )
-            .withColumn("crn", F.row_number().over(wc))
+            rank_centroids(batch, cent, digits=12)
             .filter(F.col("crn") == 1)
-            .select("vec_id", "v", "nrm", "cid")
+            .select("vec_id", "v", "vn", "cid")
         )
         # gated broadcast of the (small) routed batch into the
         # persistent index join, so idx never shuffles per batch (the
@@ -1631,7 +1587,7 @@ def s29_stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
             .withColumn(
                 "cos",
                 F.round(
-                    _dot(F.col("v"), F.col("iv")) / (F.col("nrm") * F.col("inrm")), 12
+                    _dot(F.col("v"), F.col("iv")) / (F.col("vn") * F.col("inrm")), 12
                 ),
             )
             .filter(F.col("cos") >= _S29_TAU)

@@ -4,7 +4,13 @@ shapes (short docs)."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import os
+
 from pyspark.sql import functions as F
+
+import modelorecomendacion_analisisspark_streaming_mas_spark as pkg
 
 from modelorecomendacion_analisisspark_streaming_mas_spark.operators.dedup import (
     exact_dedup,
@@ -641,3 +647,59 @@ def test_ngram_probe_index_with_cache_hands_over_pair_list(spark):
     )
     assert not hasattr(plain, "_mras_probe_cache")
     assert {tuple(r) for r in plain.collect()} == rows
+
+
+def _quantizer_copies(path: str) -> list[str]:
+    """Hand-written copies of the pinned-centroid quantizer in one module:
+    a cross join against a broadcast ``cent...`` frame, a
+    ``% <stride> == 0`` filter on the stride 37, or a ``*_STRIDE = 37``
+    declaration."""
+    tree = ast.parse(open(path).read(), path)
+    strides = {"CENTROID_STRIDE"}
+    bad = []
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and isinstance(node.value, ast.Constant):
+            for t in node.targets:
+                if isinstance(t, ast.Name) and node.value.value == 37:
+                    strides.add(t.id)
+                    if t.id.endswith("_STRIDE"):
+                        bad.append(f"{node.lineno} {t.id} = 37")
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "crossJoin"
+            and node.args
+            and isinstance(node.args[0], ast.Call)
+            and "broadcast" in ast.unparse(node.args[0].func)
+            and ast.unparse(node.args[0].args[0]).startswith("cent")
+        ):
+            bad.append(f"{node.lineno} {ast.unparse(node)[:60]}")
+        if (
+            isinstance(node, ast.Compare)
+            and isinstance(node.left, ast.BinOp)
+            and isinstance(node.left.op, ast.Mod)
+            and isinstance(node.ops[0], ast.Eq)
+        ):
+            m = node.left.right
+            if (isinstance(m, ast.Constant) and m.value == 37) or (
+                isinstance(m, ast.Name) and m.id in strides
+            ):
+                bad.append(f"{node.lineno} {ast.unparse(node)}")
+    return bad
+
+
+def test_one_coarse_quantizer_in_the_package():
+    """The pinned-centroid assignment lives in operators/similarity.py
+    (``pinned_centroids`` / ``rank_centroids``) and nowhere else."""
+    root = os.path.dirname(pkg.__file__)
+    own = os.path.join(root, "operators", "similarity.py")
+    bad = [
+        f"{os.path.relpath(path, root)}:{b}"
+        for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True))
+        if path != own
+        for b in _quantizer_copies(path)
+    ]
+    assert not bad, "use operators/similarity.py's quantizer:\n" + "\n".join(bad)
+    # the check sees each of the three forms in the primitive itself
+    assert len(_quantizer_copies(own)) == 3

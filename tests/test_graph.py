@@ -438,3 +438,19 @@ def test_pagerank_modes_leave_only_their_result_persisted(spark):
         assert left == {_result_rdd_id(result)}, (name, left)
         rows = sorted(result.collect())
         assert len(rows) == 5 and rows == sorted(result.collect()), name
+
+
+def test_g06_leaves_only_its_result_persisted(spark, sf_dir):
+    """g06 checkpoints its input edges and vertices for the kernel and
+    releases both once the kernel's own final checkpoint holds the ranks:
+    the entry adds exactly one persisted RDD, which keeps reading the
+    same rows."""
+    from modelorecomendacion_analisisspark_streaming_mas_spark.plans import REGISTRY
+
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    result = REGISTRY["g06_weighted_pagerank_top100"].fn(spark, sf_dir)
+    left = {i.id() for i in sc.getRDDStorageInfo()} - before
+    assert left == {_result_rdd_id(result)}, left
+    rows = result.collect()
+    assert rows and rows == result.collect()

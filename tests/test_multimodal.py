@@ -35,25 +35,6 @@ def test_feature_extraction_shape_and_determinism(images):
         assert again[r["id"]] == r["features"]
 
 
-def test_arrow_twin_matches_pandas_path(images):
-    """mapInArrow (zero-copy RecordBatch) must produce byte-identical
-    features to the mapInPandas twin -- the two paths differ only in the
-    Python-side transport, never in results."""
-    from modelorecomendacion_analisisspark_streaming_mas_spark.functions.multimodal import (
-        extract_image_features_arrow,
-    )
-
-    pandas_out = {
-        r["id"]: (r["features"], r["width"])
-        for r in extract_image_features(images).collect()
-    }
-    arrow_out = {
-        r["id"]: (r["features"], r["width"])
-        for r in extract_image_features_arrow(images).collect()
-    }
-    assert arrow_out == pandas_out
-
-
 def test_decode_non_png_raises_without_pil():
     """The honest gate that remains after the stdlib-PNG upgrade: payloads
     that are not PNG still need PIL."""

@@ -310,14 +310,16 @@ def test_topn_rank_windows_are_take_ordered_bounded(spark):
 
 def test_d14_broadcasts_centroids_no_cartesian(spark):
     """SemDeDup's corpus-sized joins: broadcast centroid assignment
-    (checkpointed away in the final plan, so asserted on the assignment
-    stage directly) and the cid equi-join -- never an unbroadcast
-    cartesian in either stage."""
+    (checkpointed away in the final plan, so asserted on the quantizer
+    d14 calls, over d14's input) and the cid equi-join -- never an
+    unbroadcast cartesian in either stage."""
     from pyspark.sql import functions as F
 
     from modelorecomendacion_analisisspark_streaming_mas_spark.operators.similarity import (
         _as_double,
-        _dot,
+        pinned_centroids,
+        rank_centroids,
+        with_norm,
     )
     from modelorecomendacion_analisisspark_streaming_mas_spark.sources.readers import (
         load_table,
@@ -325,13 +327,8 @@ def test_d14_broadcasts_centroids_no_cartesian(spark):
 
     # assignment stage (pre-checkpoint): centroids must broadcast
     emb = load_table(spark, SF, "embeddings")
-    n = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    cent = n.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    assign = n.crossJoin(F.broadcast(cent)).withColumn(
-        "cc", _dot(F.col("v"), F.col("cv"))
-    )
+    n = with_norm(emb.select("vec_id", _as_double(F.col("embedding")).alias("v")))
+    assign = rank_centroids(n, pinned_centroids(n), digits=12)
     pa = assign._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in pa and "CartesianProduct" not in pa
     # full query (post-checkpoint): the pair join must be a cid equi-join
